@@ -1,23 +1,28 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed by Arrow-batched ``mapInPandas`` UDFs.
 
-Decode kernels sit behind a CAPABILITY PROBE (``media_capabilities``):
-optional libraries (PIL / soundfile / av) are detected once per worker
-process, a real kernel runs where its library exists, and ``fake=None``
-(auto) degrades to a deterministic md5-seeded fake decoder where it
-does not — so the Spark-side plumbing (schema, batching, partitioning)
-is fully testable in a libs-free sandbox and upgrades in place on a
-cluster image that has the codecs. Two REAL kernels need no library at
-all and run anywhere: WAV audio (stdlib ``wave`` → per-block RMS
-energy) and binary PNM images (pure numpy → column mean intensity),
-selected per-row by payload magic. ``fake=True`` pins the fake kernel
-(the catalog queries do this: their DuckDB oracles reproduce the fake
-features exactly, which a decode-dependent path could not guarantee);
-``fake=False`` demands a real kernel and raises
-``MissingMediaLibrary`` where neither a library nor a builtin applies.
-Builtin (no-library) kernels: WAV audio, binary PNM images, and — the
-one COMPRESSED format — PNG images via stdlib zlib + per-scanline
-filter reconstruction (``_parse_png``).
+The engine does not re-implement codecs. Decode is native compute
+plugged in behind one seam:
+
+- ``mapInPandas`` carries payload batches to a per-row kernel.
+- ``media_capabilities`` probes the optional libraries (PIL /
+  soundfile / av) once per worker process.
+- Two builtin kernels need no library and run anywhere: binary PNM
+  images (pure numpy → column mean intensity) and WAV audio (stdlib
+  ``wave`` plus a RIFF walk for float and G.711 → per-block RMS
+  energy). They are selected per row by payload magic.
+- Any other image format decodes through PIL (libjpeg, libpng, ...)
+  on a cluster image that has it.
+
+Modes: ``fake=True`` pins a deterministic md5-seeded fake kernel (the
+catalog queries do this: their DuckDB oracles reproduce the fake
+features exactly). ``fake=None`` (auto) decodes for real where a
+library or builtin applies and degrades every other row to the fake,
+as it does for a corrupt member. ``fake=False`` demands a real kernel
+and raises ``MissingMediaLibrary`` where neither applies. The
+Spark-side plumbing (schema, batching, partitioning) is therefore fully
+testable in a libs-free sandbox and upgrades in place on a cluster
+image that has the codecs.
 
 At scale: binary payloads ride in parquet; ``spark.sql.files.
 maxPartitionBytes`` bounds batch memory; metadata predicates (width,
@@ -29,7 +34,6 @@ from __future__ import annotations
 
 import hashlib
 import importlib.util
-import re
 import struct
 from collections.abc import Iterator
 from functools import lru_cache
@@ -105,17 +109,8 @@ def media_capabilities() -> dict[str, bool]:
         # builtin (stdlib/numpy) kernels — always available, reported so
         # an operator can tell "no library but this format still
         # decodes for real" from "fake only"
-        "builtin:png": True,
-        "builtin:jpeg": True,
-        "builtin:gif": True,
-        "builtin:bmp": True,
-        "builtin:tiff": True,
-        "builtin:webp_lossless": True,
         "builtin:pnm": True,
         "builtin:wav": True,
-        "builtin:flac": True,
-        "builtin:aiff": True,
-        "builtin:avi_mjpeg": True,
     }
 
 
@@ -140,38 +135,8 @@ def _sniff_builtin(payload: bytes | None, kind: str) -> str | None:
         return None
     if kind == "audio" and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return "wav"
-    if kind == "audio" and payload[:4] == b"fLaC":
-        return "flac"
-    if (
-        kind == "audio"
-        and payload[:4] == b"FORM"
-        and payload[8:12] in (b"AIFF", b"AIFC")
-    ):
-        return "aiff"
     if kind == "image" and payload[:2] in (b"P5", b"P6"):
         return "pnm"
-    if kind == "image" and payload[:8] == _PNG_MAGIC:
-        return "png"
-    if kind == "image" and payload[:2] == _JPEG_MAGIC:
-        return "jpeg"
-    if kind == "image" and payload[:6] in _GIF_MAGICS:
-        return "gif"
-    if kind == "image" and payload[:2] == b"BM" and len(payload) >= 54:
-        return "bmp"
-    if kind == "image" and payload[:4] in _TIFF_MAGICS:
-        return "tiff"
-    if (
-        kind == "image"
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"WEBP"
-    ):
-        return "webp"
-    if (
-        kind == "video"
-        and payload[:4] == b"RIFF"
-        and payload[8:12] == b"AVI "
-    ):
-        return "avi_mjpeg"
     return None
 
 
@@ -219,1997 +184,6 @@ def _parse_pnm(payload: bytes) -> np.ndarray:
     raster = np.frombuffer(payload, dtype="u1", count=need, offset=pos)
     arr = raster.reshape((h, w, ch)) if ch == 3 else raster.reshape((h, w))
     return arr.astype("float64") / float(maxval)
-
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_unfilter_row(
-    ft: int, line: np.ndarray, prev: np.ndarray, bpp: int
-) -> np.ndarray:
-    """Reconstruct one PNG scanline from its filtered bytes (spec
-    filters 0-4). None and Up vectorize; Sub/Average/Paeth carry a
-    left-byte dependency, so they run as per-byte loops — fine for the
-    builtin kernel's job (real decode without image libraries), not a
-    throughput path."""
-    if ft == 0:
-        return line
-    if ft == 2:
-        return ((line.astype("u2") + prev) & 0xFF).astype("u1")
-    cur = bytearray(line.tobytes())
-    n = len(cur)
-    if ft == 1:  # Sub
-        for i in range(bpp, n):
-            cur[i] = (cur[i] + cur[i - bpp]) & 0xFF
-    elif ft == 3:  # Average
-        for i in range(n):
-            left = cur[i - bpp] if i >= bpp else 0
-            cur[i] = (cur[i] + ((left + int(prev[i])) >> 1)) & 0xFF
-    elif ft == 4:  # Paeth
-        for i in range(n):
-            a = cur[i - bpp] if i >= bpp else 0
-            b = int(prev[i])
-            c = int(prev[i - bpp]) if i >= bpp else 0
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            cur[i] = (cur[i] + pred) & 0xFF
-    else:
-        raise ValueError(f"unknown PNG filter type {ft}")
-    return np.frombuffer(bytes(cur), dtype="u1")
-
-
-def _parse_png(payload: bytes) -> np.ndarray:
-    """Stdlib-only PNG decode (zlib inflate + per-scanline filter
-    reconstruction) → float array in [0,1], shape (h, w) or (h, w, 3).
-
-    Supports the common compressed web-image shapes: 8- and 16-bit
-    depth, color types 0 (gray), 2 (RGB), 3 (palette, 8-bit), 4
-    (gray+alpha), 6 (RGBA), non-interlaced AND Adam7-interlaced (each
-    of the 7 passes is an independently filtered sub-image placed back
-    on the pass grid). Alpha is dropped (features are intensity-based);
-    palette indices resolve through PLTE; 16-bit samples are big-endian
-    per spec and normalize by 65535. Sub-8-bit depths raise ValueError
-    and auto mode degrades to the fake kernel."""
-    import struct
-    import zlib
-
-    if payload[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG payload")
-    pos = 8
-    width = height = color_type = None
-    bit_depth = 8
-    interlace = 0
-    idat = bytearray()
-    palette = None
-    while pos + 8 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # header + data + CRC (CRC not verified)
-        if ctype == b"IHDR":
-            width, height, bit_depth, color_type, _comp, _filt, interlace = (
-                struct.unpack(">IIBBBBB", data)
-            )
-            if bit_depth not in (8, 16):
-                raise ValueError(
-                    f"builtin PNG kernel needs 8/16-bit depth, got {bit_depth}"
-                )
-            if bit_depth == 16 and color_type == 3:
-                raise ValueError("16-bit palette PNG is not legal")
-            if interlace not in (0, 1):
-                raise ValueError(f"unknown PNG interlace method {interlace}")
-        elif ctype == b"PLTE":
-            palette = np.frombuffer(data, dtype="u1").reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.extend(data)
-        elif ctype == b"IEND":
-            break
-    if width is None or not idat:
-        raise ValueError("PNG missing IHDR or IDAT")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type)
-    if channels is None:
-        raise ValueError(f"unsupported PNG color type {color_type}")
-    raw = zlib.decompress(bytes(idat))
-    sb = bit_depth // 8  # bytes per sample
-    bpp = channels * sb  # filter byte distance
-
-    def unfilter_block(raw: bytes, off: int, w: int, h: int) -> tuple[np.ndarray, int]:
-        """Reconstruct one filtered sub-image of w×h pixels starting at
-        byte ``off``; returns (rows bytes array, bytes consumed)."""
-        stride = w * bpp
-        rows = np.empty((h, stride), dtype="u1")
-        prev = np.zeros(stride, dtype="u1")
-        for y in range(h):
-            base = off + y * (stride + 1)
-            if base + 1 + stride > len(raw):
-                raise ValueError("PNG raster size mismatch")
-            line = np.frombuffer(raw, dtype="u1", count=stride, offset=base + 1)
-            prev = _png_unfilter_row(raw[base], line, prev, bpp)
-            rows[y] = prev
-        return rows, h * (stride + 1)
-
-    if interlace == 0:
-        if len(raw) != (width * bpp + 1) * height:
-            raise ValueError("PNG raster size mismatch")
-        rows, _ = unfilter_block(raw, 0, width, height)
-        grid = rows.reshape(height, width, bpp)
-    else:  # Adam7: 7 sub-images on the (x0, y0, dx, dy) pass grid
-        grid = np.zeros((height, width, bpp), dtype="u1")
-        off = 0
-        for x0, y0, dx, dy in (
-            (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-            (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-        ):
-            pw = (width - x0 + dx - 1) // dx
-            ph = (height - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            rows, used = unfilter_block(raw, off, pw, ph)
-            off += used
-            grid[y0::dy, x0::dx] = rows.reshape(ph, pw, bpp)
-        if off != len(raw):
-            raise ValueError("PNG raster size mismatch")
-    if sb == 2:
-        px16 = grid.reshape(height, width * channels, 2)
-        vals = (
-            px16[:, :, 0].astype("u2") << 8 | px16[:, :, 1]
-        ).reshape(height, width, channels)
-        arr16 = vals.astype("float64") / 65535.0
-        px = arr16
-    else:
-        px = grid.reshape(height, width, channels)
-    if color_type == 3:
-        if palette is None:
-            raise ValueError("palette PNG missing PLTE")
-        px = palette[px[:, :, 0]]
-    elif color_type == 4:
-        px = px[:, :, :1]  # drop alpha
-    elif color_type == 6:
-        px = px[:, :, :3]  # drop alpha
-    arr = px if sb == 2 else px.astype("float64") / 255.0
-    return arr[:, :, 0] if arr.shape[2] == 1 else arr
-
-
-_JPEG_MAGIC = b"\xff\xd8"
-
-# zigzag scan order: _JPEG_ZIGZAG[i] = natural (row*8+col) position of the
-# i-th coefficient in transmission order (ITU T.81 figure 5)
-_JPEG_ZIGZAG = np.array(
-    [
-         0,  1,  8, 16,  9,  2,  3, 10,
-        17, 24, 32, 25, 18, 11,  4,  5,
-        12, 19, 26, 33, 40, 48, 41, 34,
-        27, 20, 13,  6,  7, 14, 21, 28,
-        35, 42, 49, 56, 57, 50, 43, 36,
-        29, 22, 15, 23, 30, 37, 44, 51,
-        58, 59, 52, 45, 38, 31, 39, 46,
-        53, 60, 61, 54, 47, 55, 62, 63,
-    ],
-    dtype="i4",
-)
-
-# 8x8 DCT-II basis matrix A[u, x] = c(u)/2 * cos((2x+1) u pi / 16);
-# inverse 2-D transform of a coefficient block X is A.T @ X @ A
-_JPEG_IDCT_A = np.array(
-    [
-        [
-            (np.sqrt(0.5) if u == 0 else 1.0)
-            / 2.0
-            * np.cos((2 * x + 1) * u * np.pi / 16.0)
-            for x in range(8)
-        ]
-        for u in range(8)
-    ]
-)
-
-
-class _JpegBitReader:
-    """MSB-first bit reader over one entropy-coded segment (byte
-    stuffing already stripped). ``peek16``/``skip`` support the
-    LUT-based Huffman fast path; ``read_bits`` extracts a whole field
-    in one int conversion instead of a per-bit loop (the per-bit walk
-    was the decode throughput floor — ~1.7M ``read_bit`` calls per ten
-    64×64 images in the round-10 profile)."""
-
-    __slots__ = ("data", "pos", "bit", "prep")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-        self.prep = None  # lazy per-segment window/LUT gathers (round 13)
-
-    def read_bit(self) -> int:
-        if self.pos >= len(self.data):
-            raise ValueError("truncated entropy-coded segment")
-        b = (self.data[self.pos] >> (7 - self.bit)) & 1
-        self.bit += 1
-        if self.bit == 8:
-            self.bit = 0
-            self.pos += 1
-        return b
-
-    def bits_remaining(self) -> int:
-        return (len(self.data) - self.pos) * 8 - self.bit
-
-    def peek16(self) -> int:
-        """Next 16 bits without consuming, zero-padded past the end —
-        a LUT hit longer than ``bits_remaining()`` must not be
-        accepted (the padding could forge a code)."""
-        chunk = self.data[self.pos : self.pos + 3]
-        v = int.from_bytes(chunk, "big") << (8 * (3 - len(chunk)))
-        return (v >> (8 - self.bit)) & 0xFFFF
-
-    def skip(self, n: int) -> None:
-        total = self.bit + n
-        self.pos += total >> 3
-        self.bit = total & 7
-
-    def read_bits(self, n: int) -> int:
-        if n == 0:
-            return 0
-        if n > self.bits_remaining():
-            raise ValueError("truncated entropy-coded segment")
-        nbytes = (self.bit + n + 7) >> 3
-        v = int.from_bytes(self.data[self.pos : self.pos + nbytes], "big")
-        v = (v >> (nbytes * 8 - self.bit - n)) & ((1 << n) - 1)
-        self.skip(n)
-        return v
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    """ITU T.81 F.2.2.1 EXTEND: map a t-bit magnitude code to its
-    signed value."""
-    if t == 0:
-        return 0
-    return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
-
-
-class _JpegHuffTable(dict):
-    """DHT table as ``{(length, code): symbol}`` PLUS a peek-16 LUT
-    for O(1) decode: every 16-bit window whose prefix is a valid code
-    maps to (symbol, code length); 0 length marks an invalid prefix.
-    Canonical Huffman codes are prefix-free, so filling each code's
-    ``2^(16-length)``-wide slice covers the space without overlap."""
-
-    __slots__ = ("lut_len", "lut_sym")
-
-    __slots__ = ("lut_len", "lut_sym", "lut_len_np", "lut_sym_np")
-
-    def __init__(self, mapping: dict[tuple[int, int], int]):
-        super().__init__(mapping)
-        lut_len = np.zeros(1 << 16, dtype="u1")
-        lut_sym = np.zeros(1 << 16, dtype="u1")
-        for (length, code), sym in mapping.items():
-            start = code << (16 - length)
-            end = (code + 1) << (16 - length)
-            lut_len[start:end] = length
-            lut_sym[start:end] = sym
-        # ndarray copies feed the per-segment vectorized gather
-        # (_prepare_entropy); the bytes copies serve the per-symbol
-        # fallback path, where scalar indexing of bytes returns a plain
-        # int at C speed (numpy scalar indexing costs ~3x per lookup)
-        self.lut_len_np = lut_len
-        self.lut_sym_np = lut_sym
-        self.lut_len = lut_len.tobytes()
-        self.lut_sym = lut_sym.tobytes()
-
-
-_JPEG_SCAN_END_RE = re.compile(rb"\xff(?![\x00\xd0-\xd7])")
-
-
-def _prepare_entropy(reader: _JpegBitReader, dc_table, ac_table):
-    """Per-SEGMENT vectorized precompute for the baseline symbol loop
-    (round 13): every bit position's 16-bit lookahead window (the
-    zero-padded ``peek16`` value, one numpy pass), and the Huffman LUT
-    gathered over those windows per table — so the per-symbol hot loop
-    is two C-speed bytes indexings (code length + symbol AT the bit
-    cursor) and one memoryview read for magnitude bits, with no slicing
-    and no ``int.from_bytes``. Setup is O(8·len(segment)) vectorized
-    numpy, amortized over every block of the segment; cached on the
-    reader, keyed per table."""
-    prep = reader.prep
-    key = (id(dc_table), id(ac_table))
-    if prep is not None:
-        hit = prep[2].get(key)
-        if hit is not None:
-            return hit
-    if prep is None:
-        data = reader.data
-        b = np.frombuffer(data + b"\x00\x00", dtype=np.uint8).astype(np.uint32)
-        v24 = (b[:-2] << np.uint32(16)) | (b[1:-1] << np.uint32(8)) | b[2:]
-        shifts = np.uint32(8) - np.arange(8, dtype=np.uint32)
-        win16 = (
-            ((v24[:, None] >> shifts[None, :]) & np.uint32(0xFFFF))
-            .astype(np.uint16)
-            .ravel()
-        )
-        reader.prep = prep = (
-            memoryview(win16.tobytes()).cast("H"),
-            win16,
-            {},
-        )
-    win_mv, win16, by_key = prep
-    triple = (
-        win_mv,
-        (
-            dc_table.lut_len_np[win16].tobytes(),
-            dc_table.lut_sym_np[win16].tobytes(),
-        ),
-        (
-            ac_table.lut_len_np[win16].tobytes(),
-            ac_table.lut_sym_np[win16].tobytes(),
-        ),
-    )
-    by_key[key] = triple
-    return triple
-
-
-def _jpeg_decode_huffman(reader: _JpegBitReader, table: dict[tuple[int, int], int]) -> int:
-    lut_len = getattr(table, "lut_len", None)
-    if lut_len is not None:
-        v = reader.peek16()
-        length = lut_len[v]
-        # accept only when the matched code fits in the REAL remaining
-        # bits — peek16's zero padding must never forge a code; the
-        # slow walk below reproduces exact truncation/invalid errors
-        if length and length <= reader.bits_remaining():
-            reader.skip(length)
-            return table.lut_sym[v]
-    code = 0
-    for length in range(1, 17):
-        code = (code << 1) | reader.read_bit()
-        sym = table.get((length, code))
-        if sym is not None:
-            return sym
-    raise ValueError("invalid JPEG Huffman code")
-
-
-def _jpeg_decode_block_coefs(
-    reader: _JpegBitReader,
-    dc_table: dict,
-    ac_table: dict,
-    coef: np.ndarray,
-    pred: int,
-) -> int:
-    """One baseline 8x8 block into zigzag-order coefficients: Huffman
-    DC diff + AC run-lengths. Returns the new DC predictor.
-
-    The per-symbol work is fully inlined on a local single-integer bit
-    cursor (peek-16 LUT hit + EXTEND value read with no method
-    dispatch) — the reader-object call overhead was ~45% of baseline
-    decode. LUT misses and end-of-data fall back to the original
-    bit-walk path, which reproduces exact truncation/invalid errors;
-    the cursor is committed back to the reader on every exit."""
-    dc_len = getattr(dc_table, "lut_len", None)
-    ac_len = getattr(ac_table, "lut_len", None)
-    if dc_len is None or ac_len is None:  # tiny tables: original path
-        t = _jpeg_decode_huffman(reader, dc_table)
-        pred += _jpeg_extend(reader.read_bits(t), t)
-        coef[0] = pred
-        k = 1
-        while k < 64:
-            rs = _jpeg_decode_huffman(reader, ac_table)
-            r, s = rs >> 4, rs & 0x0F
-            if s == 0:
-                if r == 15:
-                    k += 16
-                    continue
-                break
-            k += r
-            if k > 63:
-                raise ValueError("JPEG AC run past block end")
-            coef[k] = _jpeg_extend(reader.read_bits(s), s)
-            k += 1
-        return pred
-
-    data = reader.data
-    nbits = len(data) * 8
-    bp = reader.pos * 8 + reader.bit
-    # round 13: length/symbol are pre-gathered PER BIT POSITION
-    # (_prepare_entropy), so one symbol costs two bytes indexings at the
-    # cursor plus one memoryview u16 read for magnitude bits — the
-    # per-symbol slice + int.from_bytes + two 64K-LUT lookups are gone.
-    # Semantics identical: the gathered values are exactly
-    # lut_len[peek16(bp)] / lut_sym[peek16(bp)], and the magnitude read
-    # is the top-t bits of the same window.
-    win, (dc_len_at, dc_sym_at), (ac_len_at, ac_sym_at) = _prepare_entropy(
-        reader, dc_table, ac_table
-    )
-    k = 0  # 0 = decode DC next; 1..63 = AC position
-    while True:
-        if k == 0:
-            length = dc_len_at[bp] if bp < nbits else 0
-            if not length or length > nbits - bp:
-                break  # slow-path fallback below
-            t = dc_sym_at[bp]
-            bp += length
-            if t:
-                if bp + t > nbits:
-                    reader.pos, reader.bit = divmod(bp, 8)
-                    raise ValueError("truncated entropy-coded segment")
-                val = win[bp] >> (16 - t)
-                bp += t
-                pred += val if val >= (1 << (t - 1)) else val - (1 << t) + 1
-            coef[0] = pred
-            k = 1
-            continue
-        length = ac_len_at[bp] if bp < nbits else 0
-        if not length or length > nbits - bp:
-            break  # slow-path fallback below
-        rs = ac_sym_at[bp]
-        bp += length
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL: sixteen zeros
-                k += 16
-                if k >= 64:  # same silent block end as the bit-walk path
-                    reader.pos, reader.bit = divmod(bp, 8)
-                    return pred
-                continue
-            k = 64  # EOB
-        else:
-            k += r
-            if k > 63:
-                reader.pos, reader.bit = divmod(bp, 8)
-                raise ValueError("JPEG AC run past block end")
-            if bp + s > nbits:
-                reader.pos, reader.bit = divmod(bp, 8)
-                raise ValueError("truncated entropy-coded segment")
-            val = win[bp] >> (16 - s)
-            bp += s
-            coef[k] = val if val >= (1 << (s - 1)) else val - (1 << s) + 1
-            k += 1
-        if k >= 64:
-            reader.pos, reader.bit = divmod(bp, 8)
-            return pred
-    # LUT miss or not enough bits for the LUT's claimed code: commit
-    # the cursor and finish this block on the original exact path
-    reader.pos, reader.bit = divmod(bp, 8)
-    if k == 0:
-        t = _jpeg_decode_huffman(reader, dc_table)
-        pred += _jpeg_extend(reader.read_bits(t), t)
-        coef[0] = pred
-        k = 1
-    while k < 64:
-        rs = _jpeg_decode_huffman(reader, ac_table)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:
-                k += 16
-                continue
-            break
-        k += r
-        if k > 63:
-            raise ValueError("JPEG AC run past block end")
-        coef[k] = _jpeg_extend(reader.read_bits(s), s)
-        k += 1
-    return pred
-
-
-def _jpeg_ac_first(
-    reader: _JpegBitReader,
-    ac_table: dict,
-    coef: np.ndarray,
-    ss: int,
-    se: int,
-    al: int,
-    eobrun: int,
-) -> int:
-    """Progressive AC first-pass scan for one block (T.81 G.1.2.2):
-    run-length coded new coefficients shifted up by the point
-    transform, with cross-block EOB runs. Returns the new EOB run."""
-    if eobrun > 0:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = _jpeg_decode_huffman(reader, ac_table)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL
-                k += 16
-                continue
-            eobrun = 1 << r
-            if r:
-                eobrun += reader.read_bits(r)
-            return eobrun - 1  # this block is part of the run
-        k += r
-        if k > se:
-            raise ValueError("JPEG progressive AC run past band end")
-        coef[k] = _jpeg_extend(reader.read_bits(s), s) << al
-        k += 1
-    return 0
-
-
-def _jpeg_ac_refine(
-    reader: _JpegBitReader,
-    ac_table: dict,
-    coef: np.ndarray,
-    ss: int,
-    se: int,
-    al: int,
-    eobrun: int,
-) -> int:
-    """Progressive AC refinement scan for one block (T.81 G.1.2.3,
-    the libjpeg formulation): newly-nonzero coefficients arrive as
-    ±(1<<al); already-nonzero ones receive one correction bit each as
-    they are passed over. Returns the new EOB run."""
-    p1 = 1 << al
-    m1 = -1 << al
-
-    def refine_one(k: int) -> None:
-        if reader.read_bit() and (int(coef[k]) & p1) == 0:
-            coef[k] += p1 if int(coef[k]) >= 0 else m1
-
-    k = ss
-    if eobrun == 0:
-        while k <= se:
-            rs = _jpeg_decode_huffman(reader, ac_table)
-            r, s = rs >> 4, rs & 0x0F
-            if s == 0:
-                if r != 15:
-                    eobrun = 1 << r
-                    if r:
-                        eobrun += reader.read_bits(r)
-                    break
-                newval = 0  # ZRL: skip 16 zero-history positions
-            else:
-                if s != 1:
-                    raise ValueError(
-                        "JPEG AC refinement magnitude must be 1"
-                    )
-                newval = p1 if reader.read_bit() else m1
-            # advance over r zero-history positions, refining any
-            # nonzero-history coefficients passed on the way
-            while k <= se:
-                if int(coef[k]) != 0:
-                    refine_one(k)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if s and k <= se:
-                coef[k] = newval
-            k += 1
-    if eobrun > 0:
-        while k <= se:
-            if int(coef[k]) != 0:
-                refine_one(k)
-            k += 1
-        eobrun -= 1
-    return eobrun
-
-
-def _jpeg_split_restarts(entropy: bytes) -> list[bytes]:
-    """Split one scan's entropy stream into restart intervals (RSTn
-    markers reset the bit phase, DC predictors and EOB run) and strip
-    byte stuffing.
-
-    Round-13: C-speed re.split + bytes.replace instead of the
-    byte-at-a-time Python walk (which was ~22% of whole-image decode —
-    one bytearray.append per entropy byte). Equivalence to the walk:
-    0xFF is never the SECOND byte of a consumed pair (only 0x00 and
-    0xD0-0xD7 are), so every 0xFF in the raw stream starts its own
-    left-to-right examination and the non-overlapping regex finds
-    exactly the walk's restart boundaries; splitting BEFORE unstuffing
-    matters (FF 00 Dx must unstuff to literal FF Dx data, never split),
-    and both operations consume left-to-right non-overlapping exactly
-    like the walk. A trailing lone 0xFF stays a literal 0xFF on both
-    paths. Pinned against the reference walk in
-    tests/test_operators_unit.py::test_jpeg_split_restarts_matches_walk."""
-    return [
-        seg.replace(b"\xff\x00", b"\xff")
-        for seg in re.split(b"\xff[\xd0-\xd7]", entropy)
-    ]
-
-
-def _parse_jpeg(payload: bytes) -> np.ndarray:
-    """Stdlib+numpy JPEG decode → float array in [0,1], shape (h, w)
-    grayscale or (h, w, 3) RGB.
-
-    Supports the dominant crawl profiles: baseline sequential DCT
-    (SOF0) AND progressive DCT (SOF2 — spectral selection plus
-    successive approximation, the libjpeg/mozjpeg default scan
-    scripts), 8-bit, 1 or 3 components, standard or custom
-    Huffman/quant tables, restart markers, chroma subsampling up to
-    2x2 (nearest-neighbor upsampling — this is a feature kernel, not
-    a codec library). Both modes share one coefficient-accumulation
-    path: every scan Huffman-decodes into per-component zigzag
-    coefficient grids; dequantize + IDCT run once at the end
-    (vectorized over all blocks). Arithmetic coding, 12-bit,
-    hierarchical and CMYK raise ValueError, and auto mode degrades
-    those payloads to the fake kernel. Per-byte Huffman decoding in
-    Python — correctness and plumbing-realism, not a throughput path
-    (the real cluster image carries PIL and never enters this
-    kernel)."""
-    if payload[:2] != _JPEG_MAGIC:
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qtables: dict[int, np.ndarray] = {}
-    huffman: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    frame = None  # (h, w, [(comp_id, hs, vs, tq), ...])
-    progressive = False
-    restart_interval = 0
-    coef_grids: list[np.ndarray] = []  # per comp: (bh, bw, 64) zigzag
-    comp_qt: list[int] = []
-    saw_scan = False
-    # per-component NON-interleaved block dims (set at SOF)
-    comp_blocks: list[tuple[int, int]] = []
-    mcus_x = mcus_y = 0
-
-    while pos + 2 <= len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        if pos + 4 > len(payload):
-            raise ValueError("truncated JPEG marker segment")
-        (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-        data = payload[pos + 4 : pos + 2 + seglen]
-        pos += 2 + seglen
-        if marker == 0xDB:  # DQT
-            i = 0
-            while i < len(data):
-                pq, tq = data[i] >> 4, data[i] & 0x0F
-                if pq != 0:
-                    raise ValueError("16-bit quant tables not supported")
-                qtables[tq] = np.frombuffer(
-                    data, dtype="u1", count=64, offset=i + 1
-                ).astype("f8")
-                i += 65
-        elif marker == 0xC4:  # DHT
-            i = 0
-            while i < len(data):
-                tc, th = data[i] >> 4, data[i] & 0x0F
-                counts = data[i + 1 : i + 17]
-                i += 17
-                table: dict[tuple[int, int], int] = {}
-                code = 0
-                for length in range(1, 17):
-                    for _ in range(counts[length - 1]):
-                        table[(length, code)] = data[i]
-                        code += 1
-                        i += 1
-                    code <<= 1
-                huffman[(tc, th)] = _JpegHuffTable(table)
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 prog
-            progressive = marker == 0xC2
-            prec = data[0]
-            if prec != 8:
-                raise ValueError("only 8-bit JPEG supported")
-            h = int.from_bytes(data[1:3], "big")
-            w = int.from_bytes(data[3:5], "big")
-            nf = data[5]
-            if nf not in (1, 3):
-                raise ValueError(f"unsupported JPEG component count {nf}")
-            comps = []
-            for c in range(nf):
-                cid, hv, tq = data[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 0x0F, tq))
-            frame = (h, w, comps)
-            hmax = max(c[1] for c in comps)
-            vmax = max(c[2] for c in comps)
-            mcus_x = -(-w // (8 * hmax))
-            mcus_y = -(-h // (8 * vmax))
-            for _cid, hs, vs, tq in comps:
-                coef_grids.append(
-                    np.zeros((mcus_y * vs, mcus_x * hs, 64), dtype="i4")
-                )
-                comp_qt.append(tq)
-                cbw = -(-(-(-w * hs // hmax)) // 8)
-                cbh = -(-(-(-h * vs // vmax)) // 8)
-                comp_blocks.append((cbh, cbw))
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            raise ValueError(
-                "only baseline (SOF0) and progressive (SOF2) Huffman "
-                "JPEG supported by the builtin kernel"
-            )
-        elif marker == 0xDD:  # DRI
-            restart_interval = int.from_bytes(data[0:2], "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None:
-                raise ValueError("JPEG SOS before SOF")
-            h, w, comps = frame
-            ns = data[0]
-            scan_comps = []
-            comp_ids = [c[0] for c in comps]
-            for c in range(ns):
-                cid, tda = data[1 + 2 * c : 3 + 2 * c]
-                scan_comps.append((comp_ids.index(cid), tda >> 4, tda & 0x0F))
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ahal = data[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            if not progressive:
-                ss, se, ah, al = 0, 63, 0, 0
-            # entropy-coded data runs from here to the next real marker
-            # (first 0xFF not followed by stuffing/RSTn) — C-speed regex
-            # instead of the per-byte walk; a trailing lone 0xFF matches
-            # via the lookahead exactly where the walk's bound stopped
-            m = _JPEG_SCAN_END_RE.search(payload, pos)
-            end = m.start() if m else max(pos, len(payload) - 1)
-            _jpeg_decode_scan(
-                payload[pos:end],
-                scan_comps,
-                ss,
-                se,
-                ah,
-                al,
-                progressive,
-                comps,
-                coef_grids,
-                comp_blocks,
-                mcus_x,
-                mcus_y,
-                huffman,
-                restart_interval,
-            )
-            saw_scan = True
-            pos = end
-        # APPn / COM / others: skipped
-    if frame is None or not saw_scan:
-        raise ValueError("JPEG missing SOF/SOS")
-
-    h, w, comps = frame
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-
-    # dequantize + de-zigzag + IDCT, vectorized over every block
-    planes = []
-    for (_cid, hs, vs, tq), grid in zip(comps, coef_grids):
-        deq = np.zeros_like(grid, dtype="f8")
-        deq[..., _JPEG_ZIGZAG] = grid * qtables[tq]
-        blocks = deq.reshape(grid.shape[0], grid.shape[1], 8, 8)
-        A = _JPEG_IDCT_A
-        spatial = np.einsum("ji,mnjk,kl->mnil", A, blocks, A)
-        plane = spatial.transpose(0, 2, 1, 3).reshape(
-            grid.shape[0] * 8, grid.shape[1] * 8
-        )
-        planes.append(np.clip(plane + 128.0, 0.0, 255.0))
-
-    # upsample subsampled planes to full MCU-grid resolution (nearest)
-    full_h, full_w = mcus_y * 8 * vmax, mcus_x * 8 * hmax
-    up = []
-    for (_cid, hs, vs, _tq), plane in zip(comps, planes):
-        if hs != hmax or vs != vmax:
-            plane = np.repeat(np.repeat(plane, vmax // vs, axis=0), hmax // hs, axis=1)
-        up.append(plane[:full_h, :full_w])
-    if len(comps) == 1:
-        return up[0][:h, :w] / 255.0
-    y, cb, cr = up[0], up[1] - 128.0, up[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.clip(rgb[:h, :w], 0.0, 255.0) / 255.0
-
-
-def _jpeg_decode_scan(
-    entropy: bytes,
-    scan_comps: list[tuple[int, int, int]],
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    progressive: bool,
-    comps: list,
-    coef_grids: list[np.ndarray],
-    comp_blocks: list[tuple[int, int]],
-    mcus_x: int,
-    mcus_y: int,
-    huffman: dict,
-    restart_interval: int,
-) -> None:
-    """Decode ONE scan's entropy data into the coefficient grids.
-
-    Interleaved scans (ns > 1) walk MCUs; ANY single-component scan is
-    non-interleaved per T.81 §A.2 — baseline included, so a legal SOF0
-    file coded as three separate one-component scans walks each
-    component's own block grid in raster order (NOT the padded MCU
-    grid; with subsampling the two grids differ in both block count
-    and order). Restart markers reset DC predictors and the EOB run."""
-    segments = _jpeg_split_restarts(entropy)
-    interleaved = len(scan_comps) > 1
-    if interleaved:
-        n_units = mcus_x * mcus_y
-    else:
-        ci = scan_comps[0][0]
-        cbh, cbw = comp_blocks[ci]
-        n_units = cbh * cbw
-    per_seg = restart_interval if restart_interval else n_units
-    unit = 0
-    for seg in segments:
-        reader = _JpegBitReader(seg)
-        preds = [0] * len(comps)
-        eobrun = 0
-        for _ in range(min(per_seg, n_units - unit)):
-            if interleaved:
-                my, mx = divmod(unit, mcus_x)
-                for ci, td, ta in scan_comps:
-                    _cid, hs, vs, _tq = comps[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            coef = coef_grids[ci][my * vs + by, mx * hs + bx]
-                            if not progressive:
-                                preds[ci] = _jpeg_decode_block_coefs(
-                                    reader,
-                                    huffman[(0, td)],
-                                    huffman[(1, ta)],
-                                    coef,
-                                    preds[ci],
-                                )
-                            elif ah == 0:  # DC first scan
-                                t = _jpeg_decode_huffman(
-                                    reader, huffman[(0, td)]
-                                )
-                                preds[ci] += _jpeg_extend(
-                                    reader.read_bits(t), t
-                                )
-                                coef[0] = preds[ci] << al
-                            else:  # DC refinement: one bit per block
-                                coef[0] |= reader.read_bit() << al
-            else:
-                ci, td, ta = scan_comps[0]
-                by, bx = divmod(unit, comp_blocks[ci][1])
-                coef = coef_grids[ci][by, bx]
-                if not progressive:  # baseline non-interleaved: full block
-                    preds[ci] = _jpeg_decode_block_coefs(
-                        reader,
-                        huffman[(0, td)],
-                        huffman[(1, ta)],
-                        coef,
-                        preds[ci],
-                    )
-                elif ss == 0:
-                    if ah == 0:
-                        t = _jpeg_decode_huffman(reader, huffman[(0, td)])
-                        preds[ci] += _jpeg_extend(reader.read_bits(t), t)
-                        coef[0] = preds[ci] << al
-                    else:
-                        coef[0] |= reader.read_bit() << al
-                elif ah == 0:
-                    eobrun = _jpeg_ac_first(
-                        reader, huffman[(1, ta)], coef, ss, se, al, eobrun
-                    )
-                else:
-                    eobrun = _jpeg_ac_refine(
-                        reader, huffman[(1, ta)], coef, ss, se, al, eobrun
-                    )
-            unit += 1
-    if unit != n_units:
-        raise ValueError("JPEG entropy data ended before the last MCU")
-
-
-_GIF_MAGICS = (b"GIF87a", b"GIF89a")
-
-
-def _gif_lzw_decode(data: bytes, min_code_size: int, n_pixels: int) -> list[int]:
-    """GIF-variant LZW decompress (LSB-first bit packing, CLEAR/END
-    codes, growing code width capped at 12 bits) → palette indices.
-
-    Round-13: same speed shape as ``_tiff_lzw_decode`` — table entries
-    are ``bytes`` (C-speed concat/extend instead of per-element list
-    copies) and codes of one width are gathered in one vectorized numpy
-    shot from per-byte 32-bit little-endian windows (a batch is
-    discarded at width bumps and CLEAR resets, so correctness never
-    depends on predicting them). Values and error behavior are
-    identical to the per-bit walk; pinned by the GIF value/fuzz tests
-    plus test_gif_lzw_matches_reference_walk."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    base = bytes(range(clear))
-    table: list[bytes] = [base[i : i + 1] for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos = 0
-    nbits = len(data) * 8
-    # per-byte 32-bit LSB-first windows: code at bit p (width w <= 12)
-    # = (win[p >> 3] >> (p & 7)) & mask — w + 7 <= 19 bits always fits
-    pad = np.concatenate(
-        [np.frombuffer(data, dtype=np.uint8), np.zeros(4, np.uint8)]
-    ).astype(np.uint32)
-    win = pad[:-3] | (pad[1:-2] << 8) | (pad[2:-1] << 16) | (pad[3:] << 24)
-    buf: list[int] = []
-    buf_i = 0
-    tsize = len(table)
-    while len(out) < n_pixels:
-        if buf_i >= len(buf):
-            # batch until the next possible width bump; with a full
-            # table (no growth, width pinned at 12) batch to stream end
-            until_bump = 1 << 20 if tsize >= 4096 else (1 << width) - tsize
-            count = min(max(1, until_bump), (nbits - bitpos) // width)
-            if count <= 0:
-                raise ValueError("GIF LZW stream truncated")
-            starts = bitpos + width * np.arange(count, dtype=np.int64)
-            buf = (
-                (win[starts >> 3] >> (starts & 7)) & ((1 << width) - 1)
-            ).tolist()
-            buf_i = 0
-        code = buf[buf_i]
-        buf_i += 1
-        bitpos += width
-        if code == clear:
-            table = [base[i : i + 1] for i in range(clear)] + [b"", b""]
-            tsize = len(table)
-            width = min_code_size + 1
-            prev = None
-            buf_i = len(buf)  # positions past a reset re-derive
-            continue
-        if code == end:
-            break
-        if code < tsize and (code < clear or table[code]):
-            entry = table[code]
-        elif code == tsize and prev is not None:
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            raise ValueError("invalid GIF LZW code")
-        out += entry
-        if prev is not None and tsize < 4096:
-            table.append(prev + entry[:1])
-            tsize += 1
-            if tsize == (1 << width) and width < 12:
-                width += 1
-                buf_i = len(buf)  # stale width: re-extract
-        prev = entry
-    return list(out[:n_pixels])
-
-
-def _parse_gif(payload: bytes) -> np.ndarray:
-    """Stdlib+numpy GIF decode of the FIRST frame → float RGB array in
-    [0,1], shape (h, w, 3).
-
-    GIF87a/89a, global and local color tables, interlaced and
-    sequential row order, full LZW with dictionary growth to 12 bits
-    and mid-stream CLEAR resets. Extension blocks (graphic control,
-    comments, application) are skipped; for animations the first image
-    descriptor wins — the feature kernel's contract is one
-    representative frame (frame COUNTS belong to the metadata columns,
-    not the pixel path). Transparency is ignored (the transparent index
-    renders its palette color) — a featurizer wants deterministic
-    pixels, not compositing."""
-    if payload[:6] not in _GIF_MAGICS:
-        raise ValueError("not a GIF payload")
-    sw, sh = struct.unpack("<HH", payload[6:10])
-    flags = payload[10]
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        gct = np.frombuffer(payload, dtype="u1", count=3 * n, offset=pos).reshape(
-            n, 3
-        )
-        pos += 3 * n
-    while pos < len(payload):
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension: label + sub-blocks
-            pos += 1
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unexpected GIF block 0x{block:02x}")
-        left, top, w, h = struct.unpack("<HHHH", payload[pos : pos + 8])
-        iflags = payload[pos + 8]
-        pos += 9
-        table = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 0x07)
-            table = np.frombuffer(
-                payload, dtype="u1", count=3 * n, offset=pos
-            ).reshape(n, 3)
-            pos += 3 * n
-        if table is None:
-            raise ValueError("GIF image has no color table")
-        mcs = payload[pos]
-        pos += 1
-        data = bytearray()
-        while payload[pos] != 0:
-            ln = payload[pos]
-            data += payload[pos + 1 : pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1
-        idx = np.array(
-            _gif_lzw_decode(bytes(data), mcs, w * h), dtype="i4"
-        ).reshape(h, w)
-        if iflags & 0x40:  # interlaced: rows arrive in 4 passes
-            order = np.concatenate(
-                [
-                    np.arange(0, h, 8),
-                    np.arange(4, h, 8),
-                    np.arange(2, h, 4),
-                    np.arange(1, h, 2),
-                ]
-            )
-            deinter = np.empty_like(idx)
-            deinter[order] = idx
-            idx = deinter
-        rgb = table[np.clip(idx, 0, len(table) - 1)].astype("f8") / 255.0
-        return rgb  # first frame only
-    raise ValueError("GIF contained no image descriptor")
-
-
-def _decode_gif_features(payload: bytes, dim: int) -> np.ndarray:
-    """GIF builtin kernel: decode first frame → grayscale → dim×dim
-    area resample → per-column mean intensity (identical feature
-    contract to the PNG, JPEG, PNM and PIL paths)."""
-    arr = _parse_gif(payload)
-    gray = arr.mean(axis=2)
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-# ---------------------------------------------------------------- WEBP/VP8L
-# WebP lossless (VP8L) builtin decoder. Written from the public
-# "WebP Lossless Bitstream Specification"; lossy VP8/VP8X-animation
-# payloads raise ValueError so auto mode degrades them per row.
-
-
-class _VP8LBits:
-    """LSB-first bit reader over bytes (VP8L convention). ``read``
-    extracts the whole field in one int conversion; ``peek15``
-    supports the LUT-based prefix-code fast path (15 = the spec's
-    maximum code length), zero-padded past the end of the stream."""
-
-    __slots__ = ("data", "pos", "nbits", "win15")
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.nbits = len(data) * 8
-        self.win15 = None  # lazy per-bit-position peek15 table (round 13)
-
-    def win15_np(self) -> np.ndarray:
-        """Every bit position's ``peek15`` value as one u2 array —
-        O(8·len) vectorized setup feeding the per-code LUT gathers
-        (_VP8LCode.decode); identical zero-padded LSB-first windows."""
-        if self.win15 is None:
-            b = np.frombuffer(self.data + b"\x00\x00", dtype=np.uint8).astype(
-                np.uint32
-            )
-            v24 = b[:-2] | (b[1:-1] << np.uint32(8)) | (b[2:] << np.uint32(16))
-            shifts = np.arange(8, dtype=np.uint32)
-            self.win15 = (
-                ((v24[:, None] >> shifts[None, :]) & np.uint32(0x7FFF))
-                .astype(np.uint16)
-                .ravel()
-            )
-        return self.win15
-
-    def read(self, n: int) -> int:
-        if self.pos + n > self.nbits:
-            raise ValueError("truncated VP8L stream")
-        if n == 0:
-            return 0
-        byte = self.pos >> 3
-        nbytes = ((self.pos & 7) + n + 7) >> 3
-        v = int.from_bytes(self.data[byte : byte + nbytes], "little")
-        v = (v >> (self.pos & 7)) & ((1 << n) - 1)
-        self.pos += n
-        return v
-
-    def peek15(self) -> int:
-        byte = self.pos >> 3
-        v = int.from_bytes(self.data[byte : byte + 3], "little")
-        return (v >> (self.pos & 7)) & 0x7FFF
-
-
-class _VP8LCode:
-    """Canonical prefix code (DEFLATE-style assignment). Decode goes
-    through a peek-15 LUT (codes arrive MSB-first from the LSB-first
-    stream, so each code fills the LUT at its BIT-REVERSED value with
-    stride ``2^len``); the bit-at-a-time dict walk remains as the
-    tail/error path so truncation semantics are unchanged."""
-
-    __slots__ = ("table", "single", "lut_len", "lut_sym", "lut_len_np",
-                 "lut_sym_np", "prep_src", "len_at", "sym_at", "uses")
-
-    def __init__(self, lengths: list[int]):
-        syms = [(ln, s) for s, ln in enumerate(lengths) if ln > 0]
-        self.prep_src = None
-        self.uses = 0
-        if not syms:
-            raise ValueError("empty VP8L prefix code")
-        if len(syms) == 1:
-            self.single = syms[0][1]
-            self.table = {}
-            self.lut_len = self.lut_sym = None
-            return
-        self.single = None
-        # Kraft check, then canonical assignment sorted by (len, sym)
-        if sum(2.0 ** -ln for ln, _ in syms) > 1.0 + 1e-9:
-            raise ValueError("over-subscribed VP8L prefix code")
-        syms.sort()
-        self.table = {}
-        code = 0
-        prev_len = syms[0][0]
-        for ln, s in syms:
-            code <<= ln - prev_len
-            prev_len = ln
-            self.table[(ln, code)] = s
-            code += 1
-        lut_len = np.zeros(1 << 15, dtype="u1")
-        lut_sym = np.zeros(1 << 15, dtype="u2")  # alphabets > 255
-        for (ln, c), s in self.table.items():
-            rev = int(f"{c:0{ln}b}"[::-1], 2)
-            lut_len[rev :: 1 << ln] = ln
-            lut_sym[rev :: 1 << ln] = s
-        # only the ndarray forms are kept: the decode fast path indexes
-        # the per-bit-position GATHERS (len_at/sym_at, built from these
-        # per stream), and the fallback walks self.table — materializing
-        # 32K-entry bytes/list copies per code was ~15% of whole-image
-        # decode (round-13 profile) for tables nothing indexed anymore
-        self.lut_len = self.lut_sym = None
-        self.lut_len_np = lut_len
-        self.lut_sym_np = lut_sym
-
-    def decode(self, br: _VP8LBits) -> int:
-        if self.single is not None:
-            return self.single
-        # round 13: length/symbol pre-gathered PER BIT POSITION over the
-        # stream's win15 table (one vectorized pass per (code, stream)
-        # pair), so a symbol costs two C-speed scalar indexings at the
-        # cursor — identical values to lut_len/lut_sym[peek15()]. The
-        # gather costs O(len(stream)), so it is gated behind a use
-        # count: cold codes (the 19-symbol code-length code, simple
-        # codes read a handful of times) stay on the per-call peek15 +
-        # ndarray LUT path instead of paying a full-stream gather.
-        pos = br.pos
-        if self.prep_src is br:
-            ln = self.len_at[pos] if pos < br.nbits else 0
-            if ln and pos + ln <= br.nbits:
-                br.pos = pos + ln
-                return self.sym_at[pos]
-        else:
-            self.uses += 1
-            if self.uses > 64:
-                win15 = br.win15_np()
-                self.len_at = self.lut_len_np[win15].tobytes()
-                self.sym_at = memoryview(
-                    self.lut_sym_np[win15].tobytes()
-                ).cast("H")
-                self.prep_src = br
-                ln = self.len_at[pos] if pos < br.nbits else 0
-                if ln and pos + ln <= br.nbits:
-                    br.pos = pos + ln
-                    return self.sym_at[pos]
-            else:
-                v = br.peek15()
-                ln = int(self.lut_len_np[v])
-                if ln and pos + ln <= br.nbits:
-                    br.pos = pos + ln
-                    return int(self.lut_sym_np[v])
-        acc = 0
-        for ln in range(1, 16):
-            acc = (acc << 1) | br.read(1)
-            s = self.table.get((ln, acc))
-            if s is not None:
-                return s
-        raise ValueError("corrupt VP8L prefix code stream")
-
-
-_VP8L_CL_ORDER = (17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16)
-
-
-def _vp8l_read_code(br: _VP8LBits, alphabet: int) -> _VP8LCode:
-    """One prefix code: the 'simple' 1-2 symbol form, or code lengths
-    coded with the 19-symbol code-length code (16/17/18 repeats)."""
-    if br.read(1):  # simple
-        n_sym = br.read(1) + 1
-        first_8bit = br.read(1)
-        lengths = [0] * alphabet
-        s0 = br.read(8 if first_8bit else 1)
-        if s0 >= alphabet:
-            raise ValueError("VP8L simple-code symbol out of range")
-        if n_sym == 1:
-            lengths[s0] = 1  # degenerate: zero bits read per symbol
-            return _VP8LCode(lengths)
-        s1 = br.read(8)
-        if s1 >= alphabet or s1 == s0:
-            raise ValueError("VP8L simple-code symbol out of range")
-        lengths[s0] = lengths[s1] = 1
-        return _VP8LCode(lengths)
-    n_codes = br.read(4) + 4
-    if n_codes > len(_VP8L_CL_ORDER):
-        raise ValueError("bad VP8L code-length count")
-    cl_lengths = [0] * 19
-    for i in range(n_codes):
-        cl_lengths[_VP8L_CL_ORDER[i]] = br.read(3)
-    cl_code = _VP8LCode(cl_lengths)
-    # optional cap on the number of coded length-symbols
-    if br.read(1):
-        length_nbits = 2 + 2 * br.read(3)
-        max_symbol = 2 + br.read(length_nbits)
-    else:
-        max_symbol = alphabet
-    lengths = [0] * alphabet
-    prev = 8
-    i = 0
-    while i < alphabet:
-        if max_symbol <= 0:
-            break
-        max_symbol -= 1
-        ln = cl_code.decode(br)
-        if ln < 16:
-            lengths[i] = ln
-            i += 1
-            if ln:
-                prev = ln
-        elif ln == 16:
-            rep = 3 + br.read(2)
-            lengths[i : i + rep] = [prev] * min(rep, alphabet - i)
-            i += rep
-        elif ln == 17:
-            i += 3 + br.read(3)
-        else:  # 18
-            i += 11 + br.read(7)
-    if i > alphabet:
-        raise ValueError("VP8L code lengths overflow alphabet")
-    return _VP8LCode(lengths)
-
-
-def _vp8l_lz77_value(code: int, br: _VP8LBits) -> int:
-    """LZ77 length/distance prefix value (spec §4.2.2): 4 direct codes,
-    then (2 + code&1) << extra_bits + extra."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.read(extra) + 1
-
-
-def _vp8l_dist_map() -> list[tuple[int, int]]:
-    """The 120-entry close-neighbor (dx, dy) map for distance codes
-    1..120. The candidate set is EXACTLY the spec's plane: dy in 0..7,
-    dx in −7..8 (libwebp decodes the plane code as yoffset = code >> 4,
-    xoffset = 8 − (code & 0xF)) — 16×7 + 8 = 120 entries, none
-    dropped. Ordered by increasing Euclidean distance, ties preferring
-    larger dy, then smaller |dx|, then positive dx (matches the spec
-    table through the codes an encoder actually emits; the deep-tail
-    tie order has no independent ground truth in this container)."""
-    cand = [
-        (dx, dy)
-        for dy in range(0, 8)
-        for dx in range(-7, 9)
-        if dy > 0 or dx > 0
-    ]
-    cand.sort(key=lambda p: (p[0] * p[0] + p[1] * p[1], -p[1], abs(p[0]), p[0] < 0))
-    assert len(cand) == 120
-    return cand
-
-
-_VP8L_DIST_MAP = _vp8l_dist_map()
-
-
-def _vp8l_entropy_image(
-    br: _VP8LBits, w: int, h: int, allow_meta: bool
-) -> np.ndarray:
-    """Decode one VP8L spatially-coded image of w×h pixels → uint32
-    ARGB array (h, w). Handles color cache, LZ77 backward refs and
-    (at the top level) meta prefix-code groups."""
-    cache_bits = br.read(4) if br.read(1) else 0
-    if cache_bits > 11:
-        raise ValueError("bad VP8L color-cache size")
-    cache = [0] * (1 << cache_bits) if cache_bits else None
-    meta = None
-    group_bits = 0
-    n_groups = 1
-    if allow_meta and br.read(1):
-        group_bits = br.read(3) + 2
-        mw = (w + (1 << group_bits) - 1) >> group_bits
-        mh = (h + (1 << group_bits) - 1) >> group_bits
-        meta = _vp8l_entropy_image(br, mw, mh, False)
-        idx = ((meta >> 8) & 0xFFFF).astype("i8")
-        meta = idx
-        n_groups = int(idx.max()) + 1
-    groups = []
-    for _ in range(n_groups):
-        green = _vp8l_read_code(br, 256 + 24 + (1 << cache_bits if cache_bits else 0))
-        red = _vp8l_read_code(br, 256)
-        blue = _vp8l_read_code(br, 256)
-        alpha = _vp8l_read_code(br, 256)
-        dist = _vp8l_read_code(br, 40)
-        groups.append((green, red, blue, alpha, dist))
-    # plain-list output + inlined cache insert + bound decode methods:
-    # numpy scalar stores and the per-pixel no-op insert() call were
-    # ~30% of the pixel loop (round-12 profile)
-    out: list[int] = []
-    pos = 0
-    total = w * h
-    shift = 32 - cache_bits if cache_bits else 0
-
-    single = groups[0]
-    while pos < total:
-        if meta is not None:
-            x, y = pos % w, pos // w
-            g = groups[int(meta[(y >> group_bits), (x >> group_bits)])]
-        else:
-            g = single
-        green_c, red_c, blue_c, alpha_c, dist_c = g
-        s = green_c.decode(br)
-        if s < 256:
-            r = red_c.decode(br)
-            b = blue_c.decode(br)
-            a = alpha_c.decode(br)
-            px = (a << 24) | (r << 16) | (s << 8) | b
-            out.append(px)
-            if cache is not None:
-                cache[(0x1E35A7BD * px & 0xFFFFFFFF) >> shift] = px
-            pos += 1
-        elif s < 256 + 24:
-            length = _vp8l_lz77_value(s - 256, br)
-            dcode = _vp8l_lz77_value(dist_c.decode(br), br)
-            if dcode > 120:
-                distance = dcode - 120
-            else:
-                dx, dy = _VP8L_DIST_MAP[dcode - 1]
-                distance = max(1, dy * w + dx)
-            if distance > pos or pos + length > total:
-                raise ValueError("VP8L backward reference out of range")
-            if cache is None:
-                if distance >= length:  # non-overlapping: one memcpy
-                    out.extend(out[pos - distance : pos - distance + length])
-                    pos += length
-                else:  # overlapping run repeats as it grows
-                    for _ in range(length):
-                        out.append(out[pos - distance])
-                        pos += 1
-            else:
-                for _ in range(length):
-                    px = out[pos - distance]
-                    out.append(px)
-                    cache[(0x1E35A7BD * px & 0xFFFFFFFF) >> shift] = px
-                    pos += 1
-        else:
-            if cache is None:
-                raise ValueError("VP8L cache hit without a color cache")
-            px = cache[s - 256 - 24]
-            out.append(px)
-            cache[(0x1E35A7BD * px & 0xFFFFFFFF) >> shift] = px
-            pos += 1
-    return np.array(out, dtype="u4").reshape(h, w)
-
-
-def _vp8l_avg2(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    return (a.astype("u2") + b) >> 1
-
-
-def _vp8l_predict(mode: int, L, T, TL, TR) -> np.ndarray:
-    """The 14 spatial predictors (per-channel uint8 vectors)."""
-    if mode == 0:
-        return np.array([255, 0, 0, 0], dtype="u1")
-    if mode == 1:
-        return L
-    if mode == 2:
-        return T
-    if mode == 3:
-        return TR
-    if mode == 4:
-        return TL
-    if mode == 5:
-        return _vp8l_avg2(_vp8l_avg2(L, TR), T).astype("u1")
-    if mode == 6:
-        return _vp8l_avg2(L, TL).astype("u1")
-    if mode == 7:
-        return _vp8l_avg2(L, T).astype("u1")
-    if mode == 8:
-        return _vp8l_avg2(TL, T).astype("u1")
-    if mode == 9:
-        return _vp8l_avg2(T, TR).astype("u1")
-    if mode == 10:
-        return _vp8l_avg2(_vp8l_avg2(L, TL), _vp8l_avg2(T, TR)).astype("u1")
-    if mode == 11:  # Select
-        p = L.astype("i4") + T - TL
-        pl = int(np.abs(p - L).sum())
-        pt = int(np.abs(p - T).sum())
-        return L if pl < pt else T
-    if mode == 12:  # ClampAddSubtractFull
-        return np.clip(L.astype("i4") + T - TL, 0, 255).astype("u1")
-    if mode == 13:  # ClampAddSubtractHalf
-        avg = _vp8l_avg2(L, T).astype("i4")
-        d = avg - TL
-        # C truncating division (libwebp), not Python floor: −3/2 → −1
-        half = np.sign(d) * (np.abs(d) >> 1)
-        return np.clip(avg + half, 0, 255).astype("u1")
-    raise ValueError(f"bad VP8L predictor mode {mode}")
-
-
-def _parse_vp8l(payload: bytes) -> np.ndarray:
-    """WebP lossless decode → float RGB array in [0,1], shape (h, w, 3).
-
-    Full VP8L feature set: canonical/simple prefix codes with the
-    19-symbol code-length code, color cache, LZ77 backward references
-    (plain + 2-D neighbor-map distances), meta prefix-code groups, and
-    all four transforms (predictor, cross-color, subtract-green,
-    color-indexing incl. sub-byte pixel bundling), applied in reverse
-    order. VP8X extended containers are walked past their metadata
-    chunks (ICCP/EXIF/XMP) to the inner VP8L; lossy VP8 and animated
-    VP8X raise ValueError.
-
-    Fidelity caveat (documented, not hidden): the Select/
-    ClampAddSubtract tie-break details and the neighbor-map ordering
-    come from the public spec text; the test suite verifies them
-    against an independent encoder built from the same spec — real
-    libwebp output exercising those exact corners has no ground truth
-    in this container."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
-        raise ValueError("not a WEBP payload")
-    pos = 12
-    vp8l = None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        if cid == b"VP8L":
-            vp8l = payload[pos + 8 : pos + 8 + size]
-            break
-        if cid == b"VP8X":
-            # extended container: keep walking past metadata chunks
-            # (ICCP/EXIF/XMP) toward an inner VP8L; animations have no
-            # single still image to decode
-            if size >= 1 and payload[pos + 8] & 0x02:
-                raise ValueError("animated WebP not supported by builtin kernel")
-        elif cid == b"VP8 ":
-            raise ValueError("lossy WebP not supported by builtin kernel")
-        pos += 8 + size + (size & 1)
-    if vp8l is None or len(vp8l) < 5:
-        raise ValueError("WEBP contains no VP8L chunk")
-    if vp8l[0] != 0x2F:
-        raise ValueError("bad VP8L signature")
-    br = _VP8LBits(vp8l[1:])
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    br.read(1)  # alpha hint
-    if br.read(3) != 0:
-        raise ValueError("unknown VP8L version")
-    transforms = []
-    seen = set()
-    palette = None
-    packed_bits = 0
-    eff_w = w
-    while br.read(1):
-        ttype = br.read(2)
-        if ttype in seen:
-            raise ValueError("duplicate VP8L transform")
-        seen.add(ttype)
-        if ttype == 0:  # predictor
-            size_bits = br.read(3) + 2
-            bw = (eff_w + (1 << size_bits) - 1) >> size_bits
-            bh = (h + (1 << size_bits) - 1) >> size_bits
-            data = _vp8l_entropy_image(br, bw, bh, False)
-            transforms.append(("predictor", size_bits, data))
-        elif ttype == 1:  # cross-color
-            size_bits = br.read(3) + 2
-            bw = (eff_w + (1 << size_bits) - 1) >> size_bits
-            bh = (h + (1 << size_bits) - 1) >> size_bits
-            data = _vp8l_entropy_image(br, bw, bh, False)
-            transforms.append(("cross_color", size_bits, data))
-        elif ttype == 2:
-            transforms.append(("subtract_green", 0, None))
-        else:  # color indexing
-            n_colors = br.read(8) + 1
-            pal_img = _vp8l_entropy_image(br, n_colors, 1, False)
-            pal = pal_img[0].astype("u4")
-            # palette entries are component-wise delta-coded
-            acc = np.zeros(4, dtype="u1")
-            palette = np.zeros((n_colors, 4), dtype="u1")
-            for i in range(n_colors):
-                cur = np.array(
-                    [
-                        (pal[i] >> 24) & 0xFF,
-                        (pal[i] >> 16) & 0xFF,
-                        (pal[i] >> 8) & 0xFF,
-                        pal[i] & 0xFF,
-                    ],
-                    dtype="u2",
-                )
-                acc = ((acc + cur) & 0xFF).astype("u1")
-                palette[i] = acc
-            if n_colors <= 2:
-                packed_bits = 3
-            elif n_colors <= 4:
-                packed_bits = 2
-            elif n_colors <= 16:
-                packed_bits = 1
-            eff_w = (w + (1 << packed_bits) - 1) >> packed_bits if packed_bits else w
-            transforms.append(("color_index", n_colors, None))
-    argb = _vp8l_entropy_image(br, eff_w, h, True)
-    # inverse transforms, reverse reading order
-    for name, p1, data in reversed(transforms):
-        if name == "color_index":
-            if packed_bits:
-                px_per = 1 << packed_bits
-                bits = 8 >> packed_bits
-                green = (argb >> 8) & 0xFF
-                idx = np.zeros((h, eff_w * px_per), dtype="u4")
-                for k in range(px_per):
-                    idx[:, k::px_per] = (green >> (k * bits)) & ((1 << bits) - 1)
-                idx = idx[:, :w]
-            else:
-                idx = (argb >> 8) & 0xFF
-            if int(idx.max()) >= p1:
-                raise ValueError("VP8L palette index out of range")
-            pal32 = (
-                palette[:, 0].astype("u4") << 24
-                | palette[:, 1].astype("u4") << 16
-                | palette[:, 2].astype("u4") << 8
-                | palette[:, 3]
-            )
-            argb = pal32[idx]
-        elif name == "subtract_green":
-            g = (argb >> 8) & 0xFF
-            r = ((argb >> 16) & 0xFF) + g
-            b = (argb & 0xFF) + g
-            argb = (
-                (argb & 0xFF00FF00)
-                | ((r & 0xFF).astype("u4") << 16)
-                | (b & 0xFF)
-            )
-        elif name == "cross_color":
-            size_bits, data = p1, data
-            gh, gw = argb.shape
-
-            def s8(v: int) -> int:
-                return v - 256 if v >= 128 else v
-
-            out = argb.copy()
-            for y in range(gh):
-                trow = data[y >> size_bits]
-                for x in range(gw):
-                    t = int(trow[x >> size_bits])
-                    g2r = s8((t >> 0) & 0xFF)  # stored in blue channel
-                    g2b = s8((t >> 8) & 0xFF)  # stored in green channel
-                    r2b = s8((t >> 16) & 0xFF)  # stored in red channel
-                    px = int(out[y, x])
-                    a = (px >> 24) & 0xFF
-                    r = (px >> 16) & 0xFF
-                    g = (px >> 8) & 0xFF
-                    b = px & 0xFF
-                    gs = s8(g)
-                    r = (r + ((g2r * gs) >> 5)) & 0xFF
-                    rs = s8(r)
-                    b = (b + ((g2b * gs) >> 5)) & 0xFF
-                    b = (b + ((r2b * rs) >> 5)) & 0xFF
-                    out[y, x] = (a << 24) | (r << 16) | (g << 8) | b
-            argb = out
-        elif name == "predictor":
-            size_bits, data = p1, data
-            gh, gw = argb.shape
-            ch = np.zeros((gh, gw, 4), dtype="u1")
-            ch[:, :, 0] = (argb >> 24) & 0xFF
-            ch[:, :, 1] = (argb >> 16) & 0xFF
-            ch[:, :, 2] = (argb >> 8) & 0xFF
-            ch[:, :, 3] = argb & 0xFF
-            for y in range(gh):
-                for x in range(gw):
-                    if x == 0 and y == 0:
-                        pred = np.array([255, 0, 0, 0], dtype="u1")
-                    elif y == 0:
-                        pred = ch[0, x - 1]  # top row: forced L
-                    elif x == 0:
-                        pred = ch[y - 1, 0]  # left column: forced T
-                    else:
-                        mode = int((data[y >> size_bits, x >> size_bits] >> 8) & 0xFF)
-                        L = ch[y, x - 1]
-                        T = ch[y - 1, x]
-                        TL = ch[y - 1, x - 1]
-                        # TR of the last column wraps to this row's
-                        # first pixel (libwebp memory-layout behavior)
-                        TR = ch[y - 1, x + 1] if x + 1 < gw else ch[y, 0]
-                        pred = _vp8l_predict(mode, L, T, TL, TR)
-                    ch[y, x] = (ch[y, x].astype("u2") + pred) & 0xFF
-            argb = (
-                ch[:, :, 0].astype("u4") << 24
-                | ch[:, :, 1].astype("u4") << 16
-                | ch[:, :, 2].astype("u4") << 8
-                | ch[:, :, 3].astype("u4")
-            )
-    rgb = np.stack(
-        [(argb >> 16) & 0xFF, (argb >> 8) & 0xFF, argb & 0xFF], axis=-1
-    )
-    return rgb.astype("float64") / 255.0
-
-
-def _decode_webp_features(payload: bytes, dim: int) -> np.ndarray:
-    """WEBP (VP8L lossless) builtin kernel: decode → grayscale →
-    dim×dim area resample → per-column mean intensity (identical
-    feature contract to every other builtin path)."""
-    arr = _parse_vp8l(payload)
-    gray = arr.mean(axis=2)
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-def _parse_bmp(payload: bytes) -> np.ndarray:
-    """Stdlib+numpy BMP decode → float RGB array in [0,1], shape
-    (h, w, 3).
-
-    BITMAPINFOHEADER (and larger V4/V5 headers) with BI_RGB
-    (uncompressed) pixel data: 24-bit BGR, 32-bit BGRA (alpha
-    ignored), and 8-bit paletted; bottom-up AND top-down (negative
-    height) row orders; 4-byte row padding. RLE and bitfields
-    compression raise ValueError (auto mode degrades them per row)."""
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    (data_off,) = struct.unpack("<I", payload[10:14])
-    (hdr_size,) = struct.unpack("<I", payload[14:18])
-    if hdr_size < 40:
-        raise ValueError("BITMAPCOREHEADER BMP not supported")
-    w, h = struct.unpack("<ii", payload[18:26])
-    (bpp,) = struct.unpack("<H", payload[28:30])
-    (comp,) = struct.unpack("<I", payload[30:34])
-    (clr_used,) = struct.unpack("<I", payload[46:50])
-    if comp != 0:
-        raise ValueError(
-            f"only BI_RGB (uncompressed) BMP supported, got compression {comp}"
-        )
-    top_down = h < 0
-    h = abs(h)
-    if w <= 0 or h == 0:
-        raise ValueError("bad BMP dimensions")
-    if bpp not in (8, 24, 32):
-        raise ValueError(f"unsupported BMP bit depth {bpp}")
-    palette = None
-    if bpp == 8:
-        n = clr_used or 256
-        pal_off = 14 + hdr_size
-        if len(payload) < pal_off + 4 * n:
-            raise ValueError("BMP palette truncated")
-        # stored BGRX → RGB
-        palette = np.frombuffer(
-            payload, dtype="u1", count=4 * n, offset=pal_off
-        ).reshape(n, 4)[:, 2::-1]
-    row_stride = ((w * bpp // 8) + 3) & ~3
-    if len(payload) < data_off + row_stride * h:
-        raise ValueError("BMP pixel data truncated")
-    raster = np.frombuffer(
-        payload, dtype="u1", count=row_stride * h, offset=data_off
-    ).reshape(h, row_stride)
-    if bpp == 8:
-        idx = raster[:, :w].astype("i4")
-        if int(idx.max(initial=0)) >= len(palette):
-            # corrupt member: clamping would render wrong colors
-            # silently; fail loud like the VP8L color-index bound check
-            raise ValueError(
-                f"BMP palette index {int(idx.max())} out of range "
-                f"for {len(palette)}-entry palette"
-            )
-        rgb = palette[idx].astype("f8") / 255.0
-    else:
-        nb = bpp // 8
-        px = raster[:, : w * nb].reshape(h, w, nb)
-        rgb = px[:, :, 2::-1].astype("f8") / 255.0  # BGR(A) → RGB
-    if not top_down:
-        rgb = rgb[::-1]
-    return rgb
-
-
-def _decode_bmp_features(payload: bytes, dim: int) -> np.ndarray:
-    """BMP builtin kernel: decode → grayscale → dim×dim area resample →
-    per-column mean intensity (identical feature contract to the PNG,
-    JPEG, GIF, PNM and PIL paths)."""
-    arr = _parse_bmp(payload)
-    gray = arr.mean(axis=2)
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-_TIFF_MAGICS = (b"II*\x00", b"MM\x00*")
-
-
-def _packbits_decode(src: bytes, need: int) -> bytes:
-    """TIFF PackBits (RLE) decode — TIFF 6.0 §9: control byte n in
-    0..127 copies n+1 literals, 129..255 repeats the next byte 257−n
-    times, 128 is a no-op. Stops once ``need`` bytes are produced (a
-    strip's compressed stream may pad past the raster)."""
-    out = bytearray()
-    i = 0
-    while i < len(src) and len(out) < need:
-        n = src[i]
-        i += 1
-        if n < 128:
-            out += src[i : i + n + 1]
-            i += n + 1
-        elif n > 128:
-            if i >= len(src):
-                raise ValueError("truncated PackBits stream")
-            out += bytes([src[i]]) * (257 - n)
-            i += 1
-    return bytes(out)
-
-
-def _tiff_lzw_decode(src: bytes, need: int) -> bytes:
-    """TIFF-variant LZW decode — TIFF 6.0 §13: MSB-first bit packing,
-    ClearCode 256 / EOI 257, first dictionary entry 258, and the
-    spec's "early change" (the code width grows one code EARLIER than
-    classic LZW, when the table reaches 2^width − 1)."""
-    CLEAR, EOI = 256, 257
-    out = bytearray()
-    bitpos = 0
-    nbits = len(src) * 8
-    width = 9
-    table: list[bytes] = []
-    prev: bytes | None = None
-
-    # Vectorized code extraction: codes of one width are fixed-stride
-    # bit fields, so a whole width-segment is gathered in one numpy
-    # shot from per-byte 32-bit big-endian windows (width <= 12 plus a
-    # <=7-bit offset always fits in 32). The scalar per-code
-    # int.from_bytes read was ~40% of the LZW decode. A batch is
-    # discarded at width bumps and CLEAR resets (both re-derive
-    # bitpos), so correctness never depends on predicting them.
-    pad = np.concatenate(
-        [np.frombuffer(src, dtype=np.uint8), np.zeros(4, np.uint8)]
-    ).astype(np.uint32)
-    win = (pad[:-3] << 24) | (pad[1:-2] << 16) | (pad[2:-1] << 8) | pad[3:]
-    buf: list[int] = []
-    buf_i = 0
-
-    def refill(width: int, max_codes: int) -> None:
-        nonlocal buf, buf_i
-        count = min(max_codes, (nbits - bitpos) // width)
-        if count <= 0:
-            raise ValueError("truncated TIFF LZW stream")
-        starts = bitpos + width * np.arange(count, dtype=np.int64)
-        vals = (
-            win[starts >> 3] >> (32 - width - (starts & 7))
-        ) & ((1 << width) - 1)
-        buf = vals.tolist()
-        buf_i = 0
-
-    while len(out) < need:
-        if buf_i >= len(buf):
-            # codes until the next width bump (never past it: the
-            # reader-side early change below re-checks per code); at
-            # width 12 no bump can occur (table growth no longer moves
-            # the width, and CLEAR discards the batch), so batch big —
-            # the old per-code refill at a near-full table was the tail
-            # cost of every large strip
-            if width == 12:
-                until_bump = 1 << 20
-            else:
-                until_bump = max(1, ((1 << width) - 1) - (len(table) + 1))
-            refill(width, until_bump)
-        code = buf[buf_i]
-        buf_i += 1
-        bitpos += width
-        if code == CLEAR:
-            table = [bytes([i]) for i in range(256)] + [b"", b""]
-            width = 9
-            prev = None
-            buf_i = len(buf)  # positions past a reset re-derive
-            continue
-        if code == EOI:
-            break
-        if prev is None:
-            if code > 255 or not table:
-                raise ValueError("TIFF LZW stream must start with Clear")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt TIFF LZW code")
-        out += entry
-        prev = entry
-        # early change, reader side: the decoder's table lags the
-        # writer's by the one pending entry (the first data code after
-        # Clear appends nothing), so the width bumps when table+1
-        # reaches 2^width − 1 — one code earlier than classic LZW and
-        # one entry earlier than the writer-side check
-        if len(table) + 1 >= (1 << width) - 1 and width < 12:
-            width += 1
-            buf_i = len(buf)  # stale width: re-extract
-    return bytes(out)
-
-
-def _tiff_undo_predictor2(data: bytes, nrows: int, w: int, spp: int) -> bytes:
-    """Undo TIFF Predictor 2 (horizontal differencing): cumulative sum
-    along each row per sample channel, mod 256."""
-    a = (
-        np.frombuffer(data, dtype="u1", count=nrows * w * spp)
-        .reshape(nrows, w, spp)
-        .astype("u4")
-    )
-    return (np.cumsum(a, axis=1) & 0xFF).astype("u1").tobytes()
-
-
-def _parse_tiff(payload: bytes) -> np.ndarray:
-    """Stdlib+numpy baseline-TIFF decode → float array in [0,1], shape
-    (h, w) gray or (h, w, 3) RGB.
-
-    TIFF 6.0 baseline subset + the common compressed variants: both
-    byte orders (II/MM), 8-bit samples, chunky planar config,
-    strip-organized raster (any RowsPerStrip), compression 1 (none),
-    5 (LZW incl. the spec's early-change), 8/32946 (Deflate, stdlib
-    zlib) or 32773 (PackBits), Predictor 2 (horizontal differencing),
-    photometric 0/1 (WhiteIsZero inverts) and 2 (RGB). Tiled, planar,
-    JPEG-compressed, float-predictor and >8-bit variants raise
-    ValueError — auto mode degrades them per row. Inline IFD values
-    are left-justified in the 4-byte field for BOTH byte orders per
-    spec, so the raw slice works unmodified."""
-    if payload[:4] not in _TIFF_MAGICS:
-        raise ValueError("not a TIFF payload")
-    bo = "<" if payload[:2] == b"II" else ">"
-    (ifd_off,) = struct.unpack(bo + "I", payload[4:8])
-    (n_entries,) = struct.unpack(bo + "H", payload[ifd_off : ifd_off + 2])
-    type_fmt = {1: "B", 3: "H", 4: "I"}
-    type_size = {1: 1, 3: 2, 4: 4}
-    tags: dict[int, list[int]] = {}
-    for i in range(n_entries):
-        e = ifd_off + 2 + 12 * i
-        tag, typ, cnt = struct.unpack(bo + "HHI", payload[e : e + 8])
-        if typ not in type_fmt:
-            continue  # RATIONAL/ASCII metadata — irrelevant to the raster
-        size = type_size[typ] * cnt
-        if size <= 4:
-            raw = payload[e + 8 : e + 8 + size]
-        else:
-            (voff,) = struct.unpack(bo + "I", payload[e + 8 : e + 12])
-            raw = payload[voff : voff + size]
-        if len(raw) < size:
-            raise ValueError("truncated TIFF IFD value")
-        tags[tag] = list(struct.unpack(bo + type_fmt[typ] * cnt, raw))
-
-    def one(tag: int, default: int | None = None) -> int:
-        v = tags.get(tag)
-        if v is None:
-            if default is None:
-                raise ValueError(f"TIFF missing required tag {tag}")
-            return default
-        return v[0]
-
-    w, h = one(256), one(257)
-    if w <= 0 or h <= 0:
-        raise ValueError("bad TIFF dimensions")
-    spp = one(277, 1)
-    if any(b != 8 for b in tags.get(258, [8] * spp)):
-        raise ValueError("builtin TIFF kernel supports 8-bit samples only")
-    comp = one(259, 1)
-    photo = one(262, 1)
-    if one(284, 1) != 1:
-        raise ValueError("planar TIFF not supported")
-    if photo == 2:
-        if spp < 3:
-            raise ValueError("RGB TIFF needs >= 3 samples per pixel")
-    elif photo in (0, 1):
-        if spp != 1:
-            raise ValueError("gray TIFF with extra samples not supported")
-    else:
-        raise ValueError(f"unsupported TIFF photometric {photo}")
-    offsets = tags.get(273)
-    counts = tags.get(279)
-    if offsets is None or counts is None or len(offsets) != len(counts):
-        raise ValueError("TIFF strip tables missing or inconsistent")
-    predictor = one(317, 1)
-    if predictor not in (1, 2):
-        raise ValueError(f"unsupported TIFF predictor {predictor}")
-    rps = min(one(278, h), h)
-    if rps <= 0:
-        raise ValueError("bad TIFF RowsPerStrip")
-    row_bytes = w * spp
-    out = np.empty((h, row_bytes), dtype="u1")
-    row = 0
-    for soff, scnt in zip(offsets, counts):
-        if row >= h:
-            break
-        nrows = min(rps, h - row)
-        need = nrows * row_bytes
-        chunk = payload[soff : soff + scnt]
-        if comp == 1:
-            data = chunk
-        elif comp == 5:
-            data = _tiff_lzw_decode(chunk, need)
-        elif comp in (8, 32946):
-            import zlib
-
-            data = zlib.decompress(chunk)
-        elif comp == 32773:
-            data = _packbits_decode(chunk, need)
-        else:
-            raise ValueError(f"unsupported TIFF compression {comp}")
-        if len(data) < need:
-            raise ValueError("truncated TIFF strip")
-        if predictor == 2:
-            data = _tiff_undo_predictor2(data, nrows, w, spp)
-        out[row : row + nrows] = np.frombuffer(
-            data, dtype="u1", count=need
-        ).reshape(nrows, row_bytes)
-        row += nrows
-    if row < h:
-        raise ValueError("TIFF strips cover fewer rows than ImageLength")
-    arr = out.reshape(h, w, spp).astype("float64") / 255.0
-    if photo == 0:
-        arr = 1.0 - arr
-    return arr[:, :, 0] if photo != 2 else arr[:, :, :3]
-
-
-def _decode_tiff_features(payload: bytes, dim: int) -> np.ndarray:
-    """TIFF builtin kernel: decode → grayscale → dim×dim area resample
-    → per-column mean intensity (identical feature contract to every
-    other builtin path)."""
-    arr = _parse_tiff(payload)
-    gray = arr.mean(axis=2) if arr.ndim == 3 else arr
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-def _parse_avi_first_jpeg(payload: bytes) -> np.ndarray:
-    """Stdlib+numpy MJPEG-in-AVI decode of the FIRST video frame →
-    float RGB array (the representative-frame contract of the GIF
-    path; frame COUNTS belong to frame_sample_plan's metadata
-    columns).
-
-    Walks the RIFF chunk tree ('LIST' recursion, word alignment) for
-    the first ##dc/##db stream chunk whose body is a JPEG SOI, and
-    decodes it with the shared baseline+progressive JPEG kernel.
-    MJPEG variants that omit the DHT segment (legal in AVI, tables
-    implied) raise ValueError and degrade per row in auto mode."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-        raise ValueError("not an AVI payload")
-
-    def walk(pos: int, end: int) -> bytes | None:
-        while pos + 8 <= end:
-            cid = payload[pos : pos + 4]
-            (size,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body = pos + 8
-            if cid == b"LIST":
-                found = walk(body + 4, min(body + size, end))
-                if found is not None:
-                    return found
-            elif cid[2:4] in (b"dc", b"db"):
-                chunk = payload[body : body + size]
-                if chunk[:2] == _JPEG_MAGIC:
-                    return chunk
-            pos = body + size + (size & 1)
-        return None
-
-    frame = walk(12, len(payload))
-    if frame is None:
-        raise ValueError("AVI contains no decodable MJPEG frame")
-    return _parse_jpeg(frame)
-
-
-def _decode_avi_features(payload: bytes, dim: int) -> np.ndarray:
-    """AVI (MJPEG) builtin kernel: first frame → grayscale → dim×dim
-    area resample → per-column mean intensity (identical feature
-    contract to every other builtin path)."""
-    arr = _parse_avi_first_jpeg(payload)
-    gray = arr if arr.ndim == 2 else arr.mean(axis=2)
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-def _decode_jpeg_features(payload: bytes, dim: int) -> np.ndarray:
-    """JPEG builtin kernel: decode → grayscale → dim×dim area resample →
-    per-column mean intensity (identical feature contract to the PNG,
-    PNM and PIL paths)."""
-    arr = _parse_jpeg(payload)
-    gray = arr.mean(axis=2) if arr.ndim == 3 else arr
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
-
-
-def _decode_png_features(payload: bytes, dim: int) -> np.ndarray:
-    """PNG builtin kernel: decode → grayscale → dim×dim area resample →
-    per-column mean intensity (identical feature contract to the PNM
-    and PIL paths)."""
-    arr = _parse_png(payload)
-    gray = arr.mean(axis=2) if arr.ndim == 3 else arr
-    small = _area_resample_axis(_area_resample_axis(gray, dim, 0), dim, 1)
-    return small.mean(axis=0)
 
 
 def _decode_pnm_features(payload: bytes, dim: int) -> np.ndarray:
@@ -2315,449 +289,15 @@ def _wav_pcm_samples(raw: bytes, sw: int) -> np.ndarray:
     raise ValueError(f"unsupported WAV sample width {sw}")
 
 
-# ---------------------------------------------------------------- FLAC
-# Builtin FLAC decoder (stdlib+numpy), written from the public FLAC
-# format spec (RFC 9639): STREAMINFO, frame headers, constant/verbatim/
-# fixed/LPC subframes, Rice-coded residual partitions, wasted bits and
-# stereo decorrelation. CRCs are parsed past, not verified (a corrupt
-# member degrades per row in auto mode anyway).
-
-
-class _FlacBits(_JpegBitReader):
-    """The module's shared MSB-first bit reader plus the FLAC-specific
-    reads: signed two's complement, unary, byte alignment, and a
-    remaining-bits probe for the frame loop."""
-
-    def read(self, n: int) -> int:
-        return self.read_bits(n)
-
-    def sread(self, n: int) -> int:
-        v = self.read_bits(n)
-        return v - (1 << n) if v >> (n - 1) else v
-
-    def unary(self) -> int:
-        """Count zero bits up to (and consume) the terminating 1 —
-        byte-at-a-time: all-zero bytes are skipped whole, then the
-        first set bit is located by bit_length (the per-bit loop was
-        the Rice decode's hot path)."""
-        data, pos, bit = self.data, self.pos, self.bit
-        n = len(data)
-        if pos >= n:
-            raise ValueError("truncated entropy-coded segment")
-        q = 0
-        cur = data[pos] & (0xFF >> bit)
-        while cur == 0:
-            q += 8 - bit
-            pos += 1
-            bit = 0
-            if q > 1 << 20:
-                raise ValueError("runaway FLAC unary code")
-            if pos >= n:
-                raise ValueError("truncated entropy-coded segment")
-            cur = data[pos]
-        msb_index = 8 - cur.bit_length()  # 0-based from byte MSB
-        q += msb_index - bit
-        bit = msb_index + 1
-        if bit == 8:
-            pos += 1
-            bit = 0
-        self.pos = pos
-        self.bit = bit
-        return q
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-    def remaining(self) -> int:
-        return (len(self.data) - self.pos) * 8 - self.bit
-
-    # -- vectorized block reads (the Rice residual hot path) ----------
-    def _bit_index(self):
-        """Lazy (bits, ones, next_k-cache) for the whole buffer: one
-        unpackbits + flatnonzero per payload, shared by every frame's
-        residual partitions. next_k[param][i] = index in ``ones`` of
-        the first set bit at least param+1 bits past ones[i] — the
-        Rice chain's jump table, built once per distinct param."""
-        idx = getattr(self, "_bidx", None)
-        if idx is None:
-            bits = np.unpackbits(np.frombuffer(self.data, dtype=np.uint8))
-            ones = np.flatnonzero(bits).astype(np.int64)
-            idx = (bits, ones, {})
-            self._bidx = idx
-        return idx
-
-    def rice_block(self, n: int, param: int) -> np.ndarray:
-        """Decode ``n`` Rice(param) codes, vectorized: unary quotients
-        are gaps between set bits (followed through a precomputed jump
-        table that skips each code's param suffix bits), remainders are
-        gathered as an (n, param) bit matrix. Replaces the per-sample
-        unary()+read() loop — the FLAC decode's dominant cost."""
-        if n <= 0:
-            return np.zeros(0, dtype=np.int64)
-        bits, ones, nk_cache = self._bit_index()
-        start = self.pos * 8 + self.bit
-        k = int(np.searchsorted(ones, start))
-        m = len(ones)
-        if param == 0:
-            if k + n > m:
-                raise ValueError("truncated entropy-coded segment")
-            ks = np.arange(k, k + n, dtype=np.int64)
-        else:
-            # binary-lifted jump tables: J[j][i] = index (into ``ones``)
-            # of the terminator 2^j codes after terminator i, clipped to
-            # the sentinel m. Built once per (payload, param), reused by
-            # every partition of every frame; materializing the n-code
-            # chain is then log2(n) vectorized gathers, no per-code loop.
-            tables = nk_cache.get(param)
-            if tables is None:
-                j1 = np.minimum(
-                    np.searchsorted(ones, ones + 1 + param), m
-                ).astype(np.int64)
-                j1 = np.append(j1, m)  # sentinel maps to itself
-                tables = [j1]
-                nk_cache[param] = tables
-            if k >= m:
-                raise ValueError("truncated entropy-coded segment")
-            ks = np.empty(n, dtype=np.int64)
-            ks[0] = k
-            filled = 1
-            lvl = 0
-            while filled < n:
-                while lvl >= len(tables):
-                    prev = tables[-1]
-                    tables.append(prev[prev])
-                take = min(filled, n - filled)
-                ks[filled : filled + take] = tables[lvl][ks[:take]]
-                filled += take
-                lvl += 1
-            if int(ks[-1]) >= m:
-                raise ValueError("truncated entropy-coded segment")
-        t = ones[ks]
-        starts = np.empty(n, dtype=np.int64)
-        starts[0] = start
-        if n > 1:
-            starts[1:] = t[:-1] + 1 + param
-        q = t - starts
-        if q.max(initial=0) > 1 << 20:
-            raise ValueError("runaway FLAC unary code")
-        if param:
-            end = int(t[-1]) + 1 + param
-            if end > len(bits):
-                raise ValueError("truncated entropy-coded segment")
-            suffix_bits = bits[
-                t[:, None] + 1 + np.arange(param, dtype=np.int64)
-            ].astype(np.int64)
-            weights = np.left_shift(
-                1, np.arange(param - 1, -1, -1, dtype=np.int64)
-            )
-            v = (q << param) | (suffix_bits @ weights)
-        else:
-            end = int(t[-1]) + 1
-            v = q
-        self.pos, self.bit = divmod(end, 8)
-        return (v >> 1) ^ -(v & 1)  # zigzag, vectorized
-
-    def sread_block(self, n: int, width: int) -> np.ndarray:
-        """Decode ``n`` fixed-width signed two's-complement fields,
-        vectorized (the Rice escape / verbatim path)."""
-        if n <= 0 or width <= 0:
-            return np.zeros(max(n, 0), dtype=np.int64)
-        bits, _ones, _nk = self._bit_index()
-        start = self.pos * 8 + self.bit
-        end = start + n * width
-        if end > len(bits):
-            raise ValueError("truncated entropy-coded segment")
-        m = bits[start:end].astype(np.int64).reshape(n, width)
-        weights = np.left_shift(1, np.arange(width - 1, -1, -1, dtype=np.int64))
-        v = m @ weights
-        v -= (v >> (width - 1)) << width  # sign-extend
-        self.pos, self.bit = divmod(end, 8)
-        return v
-
-
-def _flac_residual(br: _FlacBits, blocksize: int, order: int) -> np.ndarray:
-    """Rice-coded residual: 2-bit method, 4-bit partition order,
-    2^order partitions with per-partition Rice parameter (escape code
-    switches to raw n-bit residuals). Partition bodies decode
-    vectorized (``rice_block`` / ``sread_block``)."""
-    method = br.read(2)
-    if method > 1:
-        raise ValueError("reserved FLAC residual method")
-    pbits = 4 if method == 0 else 5
-    escape = (1 << pbits) - 1
-    porder = br.read(4)
-    n_part = 1 << porder
-    if blocksize % n_part or (blocksize >> porder) < order:
-        raise ValueError("bad FLAC partition order for block")
-    parts: list[np.ndarray] = []
-    for p in range(n_part):
-        n = (blocksize >> porder) - (order if p == 0 else 0)
-        param = br.read(pbits)
-        if param == escape:
-            raw = br.read(5)
-            parts.append(br.sread_block(n, raw))
-        else:
-            parts.append(br.rice_block(n, param))
-    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
-
-
-_FLAC_FIXED = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
-
-def _flac_subframe(br: _FlacBits, blocksize: int, bps: int) -> list[int]:
-    if br.read(1):
-        raise ValueError("bad FLAC subframe padding bit")
-    ftype = br.read(6)
-    wasted = 0
-    if br.read(1):
-        wasted = br.unary() + 1
-        bps -= wasted
-    if ftype == 0:  # constant
-        out = [br.sread(bps)] * blocksize
-    elif ftype == 1:  # verbatim
-        out = br.sread_block(blocksize, bps).tolist()
-    elif 8 <= ftype <= 12:  # fixed, order 0-4
-        order = ftype - 8
-        warm = [br.sread(bps) for _ in range(order)]
-        res = _flac_residual(br, blocksize, order)
-        # A fixed predictor of order k means the residual IS the k-th
-        # difference of the signal, so reconstruction is k cumulative
-        # sums seeded from the warm-up samples' difference pyramid —
-        # exact int64 arithmetic, fully vectorized (the per-sample
-        # multiply-add loop was the other half of the FLAC hot path).
-        seeds: list[int] = []
-        cur = np.array(warm, dtype=np.int64)
-        for _ in range(order):
-            seeds.append(int(cur[-1]))
-            cur = np.diff(cur)
-        arr = res
-        for j in range(order - 1, -1, -1):
-            arr = seeds[j] + np.cumsum(arr)
-        out = warm + arr.tolist()
-    elif ftype >= 32:  # LPC, order 1-32
-        order = ftype - 31
-        out = [br.sread(bps) for _ in range(order)]
-        precision = br.read(4) + 1
-        if precision == 16:
-            raise ValueError("invalid FLAC LPC precision")
-        shift = br.sread(5)
-        if shift < 0:
-            raise ValueError("negative FLAC LPC shift")
-        coefs = [br.sread(precision) for _ in range(order)]
-        res = _flac_residual(br, blocksize, order)
-        # integer IIR with a truncating shift per step — inherently
-        # sequential, kept as the one remaining loop (order <= 32)
-        for r in res.tolist():
-            pred = sum(c * out[-1 - j] for j, c in enumerate(coefs)) >> shift
-            out.append(r + pred)
-    else:
-        raise ValueError(f"reserved FLAC subframe type {ftype}")
-    if wasted:
-        out = [v << wasted for v in out]
-    return out
-
-
-_FLAC_BLOCKSIZES = {1: 192, 2: 576, 3: 1152, 4: 2304, 5: 4608,
-                    8: 256, 9: 512, 10: 1024, 11: 2048, 12: 4096,
-                    13: 8192, 14: 16384, 15: 32768}
-
-
-def _parse_flac(payload: bytes) -> tuple[np.ndarray, int]:
-    """FLAC decode → (mono-mixed float samples in [-1, 1], channels)."""
-    if payload[:4] != b"fLaC":
-        raise ValueError("not a FLAC payload")
-    pos = 4
-    streaminfo = None
-    while pos + 4 <= len(payload):
-        hdr = payload[pos]
-        (length,) = struct.unpack(">I", b"\x00" + payload[pos + 1 : pos + 4])
-        body = payload[pos + 4 : pos + 4 + length]
-        if hdr & 0x7F == 0:
-            streaminfo = body
-        pos += 4 + length
-        if hdr & 0x80:
-            break
-    if streaminfo is None or len(streaminfo) < 34:
-        raise ValueError("FLAC missing STREAMINFO")
-    si = _FlacBits(streaminfo)
-    si.read(16), si.read(16), si.read(24), si.read(24)
-    si.read(20)  # sample rate
-    n_channels = si.read(3) + 1
-    si_bps = si.read(5) + 1
-    total = si.read(36)
-    br = _FlacBits(payload[pos:])
-    chans: list[list[int]] = [[] for _ in range(n_channels)]
-    got = 0
-    # total_samples == 0 is the spec's "unknown" marker (live/pipe
-    # encodes): decode frames until the stream runs out of sync words
-    while (total == 0 or got < total) and br.remaining() >= 32:
-        if br.read(14) != 0x3FFE:
-            if total == 0 and got > 0:
-                break  # unknown length: past the last frame
-            raise ValueError("lost FLAC frame sync")
-        br.read(1)  # reserved
-        br.read(1)  # blocking strategy
-        bs_code = br.read(4)
-        sr_code = br.read(4)
-        ch_code = br.read(4)
-        bps_code = br.read(3)
-        br.read(1)  # reserved
-        # UTF-8 coded frame/sample number
-        lead = br.read(8)
-        n_cont = 0
-        while lead & (0x80 >> n_cont) and n_cont < 7:
-            n_cont += 1
-        for _ in range(max(0, n_cont - 1)):
-            br.read(8)
-        if bs_code == 6:
-            blocksize = br.read(8) + 1
-        elif bs_code == 7:
-            blocksize = br.read(16) + 1
-        elif bs_code in _FLAC_BLOCKSIZES:
-            blocksize = _FLAC_BLOCKSIZES[bs_code]
-        else:
-            raise ValueError("reserved FLAC block size code")
-        if sr_code == 12:
-            br.read(8)
-        elif sr_code in (13, 14):
-            br.read(16)
-        elif sr_code == 15:
-            raise ValueError("invalid FLAC sample rate code")
-        bps = {0: si_bps, 1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}.get(bps_code)
-        if bps is None:
-            raise ValueError("reserved FLAC sample size code")
-        br.read(8)  # header CRC-8 (not verified)
-        if ch_code < 8:
-            if ch_code + 1 != n_channels:
-                raise ValueError("FLAC frame channel count mismatch")
-            subs = [_flac_subframe(br, blocksize, bps) for _ in range(n_channels)]
-        elif ch_code in (8, 9, 10):
-            if n_channels != 2:
-                raise ValueError("FLAC stereo decorrelation needs 2 channels")
-            extra0 = 1 if ch_code == 9 else 0
-            extra1 = 1 if ch_code in (8, 10) else 0
-            c0 = _flac_subframe(br, blocksize, bps + extra0)
-            c1 = _flac_subframe(br, blocksize, bps + extra1)
-            if ch_code == 8:  # left/side
-                subs = [c0, [left - side for left, side in zip(c0, c1)]]
-            elif ch_code == 9:  # right/side
-                subs = [[side + right for side, right in zip(c0, c1)], c1]
-            else:  # mid/side
-                left, right = [], []
-                for mid, side in zip(c0, c1):
-                    m = (mid << 1) | (side & 1)
-                    left.append((m + side) >> 1)
-                    right.append((m - side) >> 1)
-                subs = [left, right]
-        else:
-            raise ValueError("reserved FLAC channel assignment")
-        br.align()
-        br.read(16)  # frame CRC-16 (not verified)
-        for ch, s in zip(chans, subs):
-            ch.extend(s)
-        got += blocksize
-    if total and got < total:
-        raise ValueError("FLAC stream ends before total_samples")
-    if got == 0:
-        raise ValueError("FLAC stream contains no frames")
-    scale = float(1 << (si_bps - 1))
-    arr = np.array(chans, dtype="float64") / scale
-    return arr.mean(axis=0), n_channels
-
-
-def _parse_aiff(payload: bytes) -> tuple[np.ndarray, int]:
-    """AIFF / AIFF-C (FORM/AIFF, FORM/AIFC) decode → (mono-mixed float
-    samples in [-1, 1], channels). COMM carries channels / frames /
-    bits / an 80-bit extended-float rate (rate is irrelevant to the
-    feature contract but parsed past); SSND holds PCM at 8/16/24/32
-    bits — big-endian for AIFF and AIFC 'NONE'/'twos', little-endian
-    for AIFC 'sowt'. Genuinely compressed AIFF-C variants (µ-law, IMA)
-    raise ValueError."""
-    form = payload[8:12]
-    if payload[:4] != b"FORM" or form not in (b"AIFF", b"AIFC"):
-        raise ValueError("not an AIFF payload")
-    pos = 12
-    nch = bits = frames = None
-    pcm = None
-    comp = b"NONE"
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (size,) = struct.unpack(">I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"COMM":
-            nch, frames = struct.unpack(">hI", body[:6])
-            (bits,) = struct.unpack(">h", body[6:8])
-            # bytes 8..17: 80-bit extended rate, parsed past
-            if form == b"AIFC" and len(body) >= 22:
-                comp = body[18:22]
-        elif cid == b"SSND":
-            (offset,) = struct.unpack(">I", body[:4])
-            pcm = body[8 + offset :]
-        pos += 8 + size + (size & 1)
-    if comp not in (b"NONE", b"twos", b"sowt"):
-        raise ValueError(
-            f"compressed AIFF-C ({comp!r}) not supported by builtin kernel"
-        )
-    if nch is None or pcm is None:
-        raise ValueError("AIFF missing COMM or SSND")
-    if bits not in (8, 16, 24, 32):
-        raise ValueError(f"unsupported AIFF sample width {bits}")
-    little = comp == b"sowt"
-    sw = bits // 8
-    need = frames * nch * sw
-    if len(pcm) < need:
-        raise ValueError("truncated AIFF sample data")
-    raw = pcm[:need]
-    if sw == 3:  # sign-extend 24-bit
-        b3 = np.frombuffer(raw, dtype="u1").reshape(-1, 3).astype("i8")
-        if little:
-            x = (b3[:, 2] << 16) | (b3[:, 1] << 8) | b3[:, 0]
-        else:
-            x = (b3[:, 0] << 16) | (b3[:, 1] << 8) | b3[:, 2]
-        x = np.where(x >= 1 << 23, x - (1 << 24), x).astype("float64")
-    else:
-        e = "<" if little else ">"
-        x = np.frombuffer(raw, dtype={1: "i1", 2: e + "i2", 4: e + "i4"}[sw]).astype(
-            "float64"
-        )
-    x = x / float(1 << (bits - 1))
-    if nch > 1:
-        x = x.reshape(-1, nch).mean(axis=1)
-    return x, nch
-
-
 def _audio_rms_features(x: np.ndarray, dim: int) -> np.ndarray:
-    """THE audio feature contract, shared by every audio kernel:
-    ``dim`` contiguous blocks of the mono sample stream, per-block RMS
-    energy in [0, 1]."""
+    """The audio feature contract: ``dim`` contiguous blocks of the
+    mono sample stream, per-block RMS energy in [0, 1]."""
     if len(x) == 0:
         return np.zeros(dim)
     blocks = np.array_split(x, dim)
     return np.array(
         [float(np.sqrt(np.mean(b * b))) if len(b) else 0.0 for b in blocks]
     )
-
-
-def _decode_aiff_features(payload: bytes, dim: int) -> np.ndarray:
-    """AIFF builtin kernel: decode → mono mix → the shared per-block
-    RMS feature contract."""
-    x, _ = _parse_aiff(payload)
-    return _audio_rms_features(x, dim)
-
-
-def _decode_flac_features(payload: bytes, dim: int) -> np.ndarray:
-    """FLAC builtin kernel: decode → mono mix → the shared per-block
-    RMS feature contract."""
-    x, _ = _parse_flac(payload)
-    return _audio_rms_features(x, dim)
 
 
 def _decode_wav_features(payload: bytes, dim: int) -> np.ndarray:
@@ -2787,11 +327,10 @@ def decode_real(payload: bytes, kind: str = "image", dim: int = 8) -> np.ndarray
     builtin (stdlib/numpy) path where the payload's format allows.
 
     Image: PIL (any format) → grayscale → dim×dim → per-column mean
-    intensity in [0,1]; without PIL, binary PNM (P5/P6) and PNG (8-bit,
-    stdlib zlib + filter reconstruction) decode via pure-numpy builtins
-    with the same feature contract. Audio: WAV (PCM/float/G.711), FLAC
-    and AIFF/AIFF-C decode builtin into the shared per-block RMS
-    contract; video: MJPEG-AVI first frames. Raises
+    intensity in [0,1]; without PIL, binary PNM (P5/P6) decodes via a
+    pure-numpy builtin with the same feature contract. Audio: WAV
+    (PCM/float/G.711) decodes builtin into the per-block RMS contract.
+    Raises
     :class:`MissingMediaLibrary` when neither a library nor a builtin
     can handle the payload, :class:`NotImplementedError` when the
     kind's library is present but no kernel is written for it.
@@ -2808,30 +347,18 @@ def decode_real(payload: bytes, kind: str = "image", dim: int = 8) -> np.ndarray
         return arr.mean(axis=0)
     if builtin is not None:
         import wave
-        import zlib
 
         kernel = {
             "pnm": _decode_pnm_features,
-            "png": _decode_png_features,
-            "jpeg": _decode_jpeg_features,
-            "gif": _decode_gif_features,
-            "bmp": _decode_bmp_features,
-            "tiff": _decode_tiff_features,
-            "webp": _decode_webp_features,
             "wav": _decode_wav_features,
-            "flac": _decode_flac_features,
-            "aiff": _decode_aiff_features,
-            "avi_mjpeg": _decode_avi_features,
         }[builtin]
         try:
             return kernel(payload, dim)
         except (
             IndexError,  # truncated payload: slicing past the end
-            KeyError,
             EOFError,
             OverflowError,
             struct.error,  # truncated fixed-width header fields
-            zlib.error,  # corrupt PNG deflate stream
             wave.Error,  # malformed WAV container
         ) as e:
             # corrupt members are a fact of any crawl corpus — surface
@@ -2860,7 +387,7 @@ def _decode_dispatch(
     present, or where the payload magic matches a builtin kernel —
     else fake. In auto mode a sniffed payload whose decode then FAILS
     (truncated file, profile outside the builtin kernel — e.g.
-    arithmetic-coded JPEG) also degrades to the fake: a crawl corpus
+    16-bit PNM or ADPCM WAV) also degrades to the fake: a crawl corpus
     always contains malformed members and one must never kill the batch.
     fake=False propagates the decode error — that mode exists to make
     failures loud."""

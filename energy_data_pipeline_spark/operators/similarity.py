@@ -94,7 +94,8 @@ def cosine_near_dup_pairs(
     n_planes: int = N_PLANES,
     dim: int = 64,
     pins_out: list | None = None,
-    n_rows: int | None = None,
+    *,
+    n_rows: int,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: LSH sign-bucket the corpus
     once (persisted — compute-once across the self-join branches), join
@@ -109,12 +110,11 @@ def cosine_near_dup_pairs(
     sequential fold + rnd replica (functions/pairwise docstring;
     row-for-row equivalence pinned by tests/test_pairwise_kernel.py).
     The kernel engages only when the expected within-bucket pair count
-    pays for the Python boundary (``n_rows``, when the caller knows the
-    corpus size — at 2k vectors the kernel measured +0.13 s of pure
-    boundary cost over the expression join, while the pair volume that
-    makes it win grows quadratically with bucket occupancy); below the
-    cutoff the original expression self-join runs. Both paths produce
-    identical rows."""
+    pays for the Python boundary (``n_rows``, the corpus size — at 2k
+    vectors the kernel measured +0.13 s of pure boundary cost over the
+    expression join, while the pair volume that makes it win grows
+    quadratically with bucket occupancy); below the cutoff the original
+    expression self-join runs. Both paths produce identical rows."""
     from pyspark.storagelevel import StorageLevel
 
     from ..functions.pairwise import bucket_cosine_pairs
@@ -130,7 +130,7 @@ def cosine_near_dup_pairs(
         pins_out.append((e, StorageLevel.MEMORY_AND_DISK))
     # expected total pairs ~ n^2 / 2^planes buckets / 2; kernel pays
     # past ~3M pairs (same economics as pairwise.semdedup_blocks)
-    if n_rows is not None and n_rows * n_rows // (2 << n_planes) < 3_000_000:
+    if n_rows * n_rows // (2 << n_planes) < 3_000_000:
         a = e.alias("a")
         b = e.alias("b")
         return (

@@ -510,11 +510,15 @@ PQ_QUERY_MAX = IVF_QUERY_MAX
 # codebooks/coarse cells, and without this each entry's first
 # invocation re-ran identical corpus-scale training (model caching per
 # the plan_cache rules: pure snapshot-derived state, never time/RNG).
+# The snapshot path is versioned exactly like the plan memo's keys, so
+# a rewritten snapshot retrains instead of serving a stale model.
 _MODEL_MEMO: dict[tuple, object] = {}
 
 
 def _memo_model(spark: SparkSession, key: tuple, train):
-    full = (spark.sparkContext.applicationId,) + key
+    from . import plan_cache
+
+    full = (spark.sparkContext.applicationId,) + plan_cache._versioned_key(key)
     if full not in _MODEL_MEMO:
         _MODEL_MEMO[full] = train()
     return _MODEL_MEMO[full]

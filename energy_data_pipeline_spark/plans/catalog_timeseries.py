@@ -41,6 +41,7 @@ def holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation dashboards imply exactly this next-day view):
     ``l_t = a*y_t + (1-a)*(l+b); b_t = g*(l_t - l) + (1-g)*b`` with
     l1=y1, b1=y2-y1, forecast(h) = l_T + h*b_T for h in {1, 3, 7}.
+    A one-day series has no trend: level=y1, trend=0, forecast=y1.
 
     Execution shape: the recurrence is SEQUENTIAL per series, so each
     (type)-partition's day-ordered totals collapse into ONE array
@@ -74,7 +75,11 @@ def holt_from_daily(daily: DataFrame) -> DataFrame:
     )
     a, g = _HOLT_ALPHA, _HOLT_BETA
     l0 = F.element_at("ys", 1)
-    b0 = F.element_at("ys", 2) - F.element_at("ys", 1)
+    # CaseWhen evaluates only the taken branch, so a one-day series
+    # never reaches the out-of-range element_at(ys, 2)
+    b0 = F.when(
+        F.size("ys") >= 2, F.element_at("ys", 2) - F.element_at("ys", 1)
+    ).otherwise(F.lit(0.0))
 
     def step(acc, y):
         new_l = F.lit(a) * y + F.lit(1 - a) * (acc["l"] + acc["b"])
@@ -306,7 +311,7 @@ def _holt_oracle(sf_dir: str) -> str:
     out = []
     for et in sorted(series):
         ys = series[et]
-        level, b = ys[0], ys[1] - ys[0]
+        level, b = ys[0], (ys[1] - ys[0] if len(ys) >= 2 else 0.0)
         for y in ys[1:]:
             new_l = a * y + (1 - a) * (level + b)
             b = g * (new_l - level) + (1 - g) * b

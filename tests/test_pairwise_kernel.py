@@ -214,3 +214,33 @@ def test_pair_cosines_empty_and_singleton_groups(spark):
     norms = np.array([2.0])
     ii, jj = np.triu_indices(1, 1)
     assert _pair_cosines(V, norms, ii, jj).size == 0
+
+
+def test_near_dup_path_selection_from_plan(spark):
+    """cosine_near_dup_pairs picks its pair stage from the required
+    ``n_rows`` alone: below the ~3M expected-pair cutoff the expression
+    self-join, past it the Arrow bucket kernel. Pinned on the optimized
+    plan of a tiny frame — no action runs."""
+    from energy_data_pipeline_spark.operators.similarity import (
+        cosine_near_dup_pairs,
+    )
+
+    tiny = spark.createDataFrame(
+        [(i, [float(i + d) for d in range(64)]) for i in range(4)],
+        "vec_id bigint, embedding array<float>",
+    )
+    with pytest.raises(TypeError):
+        cosine_near_dup_pairs(tiny)  # no silent default path
+
+    def plan(n_rows: int) -> str:
+        pins: list = []
+        df = cosine_near_dup_pairs(tiny, pins_out=pins, n_rows=n_rows)
+        text = df._jdf.queryExecution().optimizedPlan().toString()
+        for frame, _level in pins:
+            frame.unpersist()
+        return text
+
+    small = plan(2_000)  # 2k² / 2^7 ≈ 31k expected pairs
+    assert "Join" in small and "FlatMapGroupsInArrow" not in small
+    big = plan(100_000)  # 100k² / 2^7 ≈ 78M expected pairs
+    assert "FlatMapGroupsInArrow" in big and "Join" not in big

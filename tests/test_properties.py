@@ -501,39 +501,6 @@ def test_dsir_weights_favor_target_source(spark, sf_small):
     assert means[True] > means[False], means
 
 
-# --- progressive JPEG == baseline JPEG on ANY image ----------------------
-@settings(max_examples=10, deadline=None)
-@given(
-    h=st.integers(min_value=4, max_value=25),
-    w=st.integers(min_value=4, max_value=25),
-    color=st.booleans(),
-    subsample=st.booleans(),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_progressive_jpeg_decodes_identically_to_baseline(
-    h, w, color, subsample, seed
-):
-    """For ANY image content/geometry, the progressive scan script
-    refined to Al=0 carries exactly the baseline coefficients — decode
-    of both encodings must be bit-identical (successive-approximation
-    refinement, EOB-run, ZRL and non-interleaved block-walk paths all
-    sit under this one invariant)."""
-    import numpy as np
-
-    from energy_data_pipeline_spark.operators import multimodal
-
-    from .test_operators_unit import _jpeg_bytes, _jpeg_progressive_bytes
-
-    rng = np.random.default_rng(seed)
-    shape = (h, w, 3) if color else (h, w)
-    px = rng.integers(0, 256, size=shape, dtype="u1")
-    sub = subsample and color
-    base = multimodal._parse_jpeg(_jpeg_bytes(px, subsample=sub))
-    prog = multimodal._parse_jpeg(_jpeg_progressive_bytes(px, subsample=sub))
-    assert prog.shape == base.shape
-    assert np.array_equal(prog, base)
-
-
 # --- round-10 session-2: OLS trend + Benford digit extraction ------------
 _trend_series = st.dictionaries(
     st.sampled_from(["click", "view", "purchase"]),
@@ -654,192 +621,3 @@ def test_benford_digit_extraction_matches_python(spark, vals, tmp_path_factory):
             expect[int(str(int(math.floor(v)))[0])] += 1
     got = {r["digit"]: r["n"] for r in benford_digit_profile(spark, str(d)).collect()}
     assert got == dict(expect)
-
-
-# --- round-10 session-2: fuzz the TIFF and VP8L builtin kernels ----------
-@settings(max_examples=12, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=24),
-    w=st.integers(min_value=1, max_value=24),
-    gray=st.booleans(),
-    big_endian=st.booleans(),
-    comp=st.sampled_from([1, 5, 8, 32773]),
-    predictor=st.sampled_from([1, 2]),
-    rps=st.integers(min_value=1, max_value=24),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_tiff_roundtrip_fuzz(h, w, gray, big_endian, comp, predictor, rps, seed):
-    """Any 8-bit image × any (byte order, compression, predictor,
-    strip height) combination must roundtrip bit-exactly through the
-    builtin TIFF kernel."""
-    import numpy as np
-
-    from energy_data_pipeline_spark.operators import multimodal
-    from tests.test_operators_unit import _tiff_bytes
-
-    rng = np.random.RandomState(seed)
-    shape = (h, w) if gray else (h, w, 3)
-    px = rng.randint(0, 256, size=shape).astype("u1")
-    arr = multimodal._parse_tiff(
-        _tiff_bytes(
-            px,
-            big_endian=big_endian,
-            compression=comp,
-            predictor=predictor,
-            rows_per_strip=min(rps, h),
-        )
-    )
-    assert np.allclose(arr * 255.0, px, atol=1e-12)
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    h=st.integers(min_value=1, max_value=20),
-    w=st.integers(min_value=1, max_value=20),
-    n_colors=st.integers(min_value=1, max_value=24),
-    cache_bits=st.sampled_from([0, 3, 6]),
-    use_lz77=st.booleans(),
-    subtract_green=st.booleans(),
-    pred_bits=st.sampled_from([None, 2, 3]),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_vp8l_roundtrip_fuzz(
-    h, w, n_colors, cache_bits, use_lz77, subtract_green, pred_bits, seed
-):
-    """Any low-cardinality RGB image × any (cache, LZ77,
-    subtract-green, predictor) combination must roundtrip bit-exactly
-    through the builtin VP8L kernel — low color counts maximize run/
-    cache-hit coverage, tiny dimensions stress edge predictors."""
-    import numpy as np
-
-    from energy_data_pipeline_spark.operators import multimodal
-    from tests.test_operators_unit import _webp_bytes
-
-    rng = np.random.RandomState(seed)
-    pal = rng.randint(0, 256, size=(n_colors, 3)).astype("u1")
-    px = pal[rng.randint(0, n_colors, size=(h, w))]
-    arr = multimodal._parse_vp8l(
-        _webp_bytes(
-            px,
-            cache_bits=cache_bits,
-            use_lz77=use_lz77,
-            subtract_green=subtract_green,
-            predictor_size_bits=pred_bits,
-        )
-    )
-    assert np.allclose(arr * 255.0, px, atol=1e-12)
-
-
-@settings(max_examples=12, deadline=None)
-@given(
-    n=st.integers(min_value=1, max_value=300),
-    stereo=st.booleans(),
-    bps=st.sampled_from([8, 16, 24]),
-    mode=st.sampled_from(["indep", "left_side", "right_side", "mid_side"]),
-    kind=st.sampled_from(
-        ["verbatim", "constant", "fixed0", "fixed1", "fixed2", "fixed3",
-         "fixed4", "lpc"]
-    ),
-    porder=st.sampled_from([0, 1, 2]),
-    escape=st.booleans(),
-    seed=st.integers(min_value=0, max_value=2**31 - 1),
-)
-def test_flac_roundtrip_fuzz(n, stereo, bps, mode, kind, porder, escape, seed):
-    """Any PCM stream × any (bit depth, stereo decorrelation, subframe
-    type, partition order, escape) combination must roundtrip
-    bit-exactly through the builtin FLAC kernel."""
-    import numpy as np
-
-    from energy_data_pipeline_spark.operators import multimodal
-    from tests.test_operators_unit import _flac_bytes
-
-    if not stereo:
-        mode = "indep"  # decorrelation modes need two channels
-    rng = np.random.RandomState(seed)
-    lim = 1 << (bps - 3)
-    shape = (n, 2) if stereo else (n,)
-    s = np.cumsum(rng.randint(-lim // 8, lim // 8, size=shape), axis=0).clip(
-        -(1 << (bps - 1)), (1 << (bps - 1)) - 1
-    )
-    x, nch = multimodal._parse_flac(
-        _flac_bytes(s, bps=bps, mode=mode, blocksize=64, kind=kind,
-                    porder=porder, escape=escape)
-    )
-    assert nch == (2 if stereo else 1)
-    mono = s.mean(axis=1) if stereo else s.astype("float64")
-    assert np.allclose(x, mono / float(1 << (bps - 1)), atol=1e-12)
-
-
-def test_bit_reader_field_ops_match_bit_loops():
-    """The round-11 whole-field bit-reader rewrites (JPEG peek16/skip/
-    read_bits, VP8L read/peek15, FLAC unary) must agree with the
-    reference per-bit loops at every offset over random data."""
-    import numpy as np
-
-    from energy_data_pipeline_spark.operators.multimodal import (
-        _FlacBits,
-        _JpegBitReader,
-        _VP8LBits,
-    )
-
-    rng = np.random.RandomState(3)
-    data = bytes(rng.randint(0, 256, 48, dtype="u1").tolist())
-
-    def msb_bits(pos, n):
-        v = 0
-        for i in range(n):
-            p = pos + i
-            v = (v << 1) | ((data[p >> 3] >> (7 - (p & 7))) & 1)
-        return v
-
-    def lsb_bits(pos, n):
-        v = 0
-        for i in range(n):
-            p = pos + i
-            v |= ((data[p >> 3] >> (p & 7)) & 1) << i
-        return v
-
-    for start in range(0, 120):
-        for n in range(0, 17):
-            if start + n > len(data) * 8:
-                continue
-            r = _JpegBitReader(data)
-            r.skip(start)
-            assert r.read_bits(n) == msb_bits(start, n), (start, n)
-            assert (r.pos * 8 + r.bit) == start + n
-            b = _VP8LBits(data)
-            b.pos = start
-            assert b.read(n) == lsb_bits(start, n), (start, n)
-        r = _JpegBitReader(data)
-        r.skip(start)
-        want16 = msb_bits(start, min(16, len(data) * 8 - start))
-        want16 <<= 16 - min(16, len(data) * 8 - start)  # zero-pad
-        assert r.peek16() == want16, start
-        b = _VP8LBits(data)
-        b.pos = start
-        assert b.peek15() == lsb_bits(start, min(15, len(data) * 8 - start)), start
-
-    # unary vs the reference bit loop, at every start offset
-    def ref_unary(pos):
-        q = 0
-        while True:
-            if pos >= len(data) * 8:
-                return None, None
-            bit = (data[pos >> 3] >> (7 - (pos & 7))) & 1
-            pos += 1
-            if bit:
-                return q, pos
-            q += 1
-
-    for start in range(0, 260):
-        want_q, want_pos = ref_unary(start)
-        f = _FlacBits(data)
-        f.pos, f.bit = start >> 3, start & 7
-        if want_q is None:
-            import pytest as _pytest
-
-            with _pytest.raises(ValueError):
-                f.unary()
-        else:
-            assert f.unary() == want_q, start
-            assert f.pos * 8 + f.bit == want_pos, start

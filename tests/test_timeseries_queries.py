@@ -122,6 +122,57 @@ def test_holt_forecast_recurrence_and_horizons(spark, sf_small):
     assert rows[0]["trend"] == round(b, 4)
 
 
+def test_holt_forecast_one_day_series_both_engines(spark, tmp_path):
+    """An event type seen on a single day has no y2: both engines must
+    define it as level=y1, trend=0, fc=y1 instead of aborting the whole
+    panel, while multi-day types keep the usual recurrence."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from energy_data_pipeline_spark.plans.catalog_timeseries import (
+        _holt_oracle,
+        holt_forecast,
+    )
+
+    from .oracle_harness import compare, duck_connection
+
+    rows = [
+        (1, dt.datetime(2024, 1, 1, 12, 0), 10, "lonely", 5.0),
+        (2, dt.datetime(2024, 1, 1, 9, 0), 11, "steady", 1.0),
+        (3, dt.datetime(2024, 1, 2, 9, 0), 11, "steady", 4.0),
+        (4, dt.datetime(2024, 1, 3, 9, 0), 11, "steady", 2.5),
+    ]
+    df = spark.createDataFrame(
+        rows, "event_id bigint, ts timestamp_ntz, user_id bigint, "
+        "event_type string, value double"
+    )
+    sf = str(tmp_path / "sf_one_day")
+    os.makedirs(sf)
+    table = pa.Table.from_pandas(df.toPandas())
+    for name in (
+        "events region nation customer supplier part orders lineitem "
+        "documents embeddings"
+    ).split():
+        # only events is queried; the rest are view-registration stubs
+        pq.write_table(table, f"{sf}/{name}.parquet")
+
+    out = {r["event_type"]: r for r in holt_forecast(spark, sf).collect()}
+    lonely = out["lonely"]
+    assert (lonely["n_days"], lonely["level"], lonely["trend"]) == (1, 5.0, 0.0)
+    assert lonely["fc_1"] == lonely["fc_3"] == lonely["fc_7"] == 5.0
+    assert out["steady"]["n_days"] == 3
+
+    con = duck_connection(sf)
+    try:
+        report = compare(holt_forecast(spark, sf), con, _holt_oracle(sf))
+        assert report["ok"], report["issues"]
+    finally:
+        con.close()
+
+
 def test_top_paths_compose_on_session_labels(spark, sf_small):
     from pyspark.sql import functions as F
 
