@@ -310,7 +310,13 @@ def refresh_dashboard_incremental(
         rollup = kept.unionByName(delta.select(*prev.columns))
     else:
         rollup = delta
-    rollup = rollup.persist(StorageLevel.MEMORY_AND_DISK)
+    # ONE partition: the rollup is |days|x24x|types| rows by design, but
+    # left alone it keeps a partition per input file (the kept rollup
+    # files plus the delta's), and every panel stage then fans out that
+    # many tasks — a count that grows with each tick's new sink file.
+    # The coalesce is narrow, so it stops at the delta aggregation's
+    # exchange and the events scan below it stays parallel.
+    rollup = rollup.coalesce(1).persist(StorageLevel.MEMORY_AND_DISK)
     try:
         frames = {ROLLUP_SUB: rollup, **_panels_from_rollup(rollup)}
         return manifest_table.group_overwrite(

@@ -73,16 +73,20 @@ def daily_pv_job(
         order_col="_seq",
     ).drop("_seq")
 
-    # persist: the write + the three stats would otherwise re-run the
-    # whole unpivot/dedup DAG four times
+    # persist: the write + the batch stats would otherwise re-run the
+    # whole unpivot/dedup DAG twice; both batch stats come from one pass
     final = final.persist()
     try:
         overwrite_date_range(final, table_path, ts_col="datetime")
         loaded = final.sparkSession.read.parquet(table_path)
+        batch = final.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.countDistinct(F.to_date("datetime")).alias("days"),
+        ).collect()[0]
         return {
-            "rows_in_batch": final.count(),
+            "rows_in_batch": batch["rows"],
             "rows_in_table": loaded.count(),
-            "days_in_batch": final.select(F.to_date("datetime")).distinct().count(),
+            "days_in_batch": batch["days"],
         }
     finally:
         final.unpersist()

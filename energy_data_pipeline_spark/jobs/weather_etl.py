@@ -26,7 +26,14 @@ def weather_etl_job(
 ) -> dict:
     """Impute missing values then upsert into the accumulating table
     keyed on (station, timestamp) — new data wins, matching
-    merge_to_all.py's keep-last dedup."""
+    merge_to_all.py's keep-last dedup.
+
+    The imputed batch is materialized ONCE (eager local checkpoint):
+    the upsert reads it twice (anti-join key set and union) and the
+    after-stats once more, and each read would otherwise re-run the
+    spline ``applyInPandas``. A lost checkpoint block fails the job
+    loudly rather than answering wrong, and re-running the job is safe
+    because the K5 upsert is idempotent on (station, timestamp)."""
     before_row = impute_stats(raw_df, list(value_cols)).collect()[0]
     before = {f"{c}_nulls_before": before_row[f"{c}_nulls"] for c in value_cols}
     imputed = impute_missing_values(
@@ -35,7 +42,7 @@ def weather_etl_job(
         value_cols=list(value_cols),
         keys=[station_col],
         short_gap_max=short_gap_max,
-    )
+    ).localCheckpoint(eager=True)
     n = upsert(
         imputed.sparkSession,
         imputed,

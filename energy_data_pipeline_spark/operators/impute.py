@@ -210,8 +210,9 @@ def historical_average_impute(
       SETS ((keys,m,d,h), (keys), ()) instead of three scans;
     - all value columns share that aggregation and the three broadcast
       joins, so N columns cost the same joins as one.
-    The (small) levels table is persisted for its three consumers; it is
-    profile-sized (keys × calendar slots) and MEMORY_AND_DISK-evictable.
+    The levels table is NOT cached: AQE reuses the grouping-sets
+    exchange for its three consumers, and a ``persist()`` here would
+    register a cache entry nobody releases (one more per call).
 
     Runs shorter than ``min_gap_len`` are left for the spline path.
     """
@@ -251,7 +252,6 @@ def historical_average_impute(
             *[F.avg(vc).alias(f"_mean_{vc}") for vc in vcols],
             F.grouping_id().alias("_gid"),
         )
-        .persist()
     )
     n = len(gcols)
     slot_gid, series_gid, global_gid = 0, (1 << 3) - 1, (1 << n) - 1

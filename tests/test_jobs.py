@@ -109,6 +109,17 @@ def test_weather_etl_job_imputes_and_merges(spark, tmp_path):
     assert out.groupBy("station_name", "tm").count().filter("count > 1").count() == 0
 
 
+def test_weather_etl_job_leaves_no_cache_entry(spark, tmp_path):
+    """Two weather ticks must not grow the session's CacheManager: the
+    impute operator caches nothing it cannot release, and the imputed
+    batch is materialized by a local checkpoint, not a cache entry."""
+    spark.catalog.clearCache()
+    path = str(tmp_path / "weather_all")
+    weather_etl_job(_weather_batch(spark), path)
+    weather_etl_job(_weather_batch(spark, hours=96), path)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_serve_dashboard_panels(spark, sf_small):
     panels = serve_dashboard(spark, sf_small)
     assert set(panels) == {
@@ -993,6 +1004,41 @@ def test_incremental_refresh_matches_full_recompute(spark, sf_small, tmp_path):
         for r in rollup.select("event_type", "day", "hour").collect()
     }
     assert got_keys == want_keys
+
+
+def test_incremental_refresh_jobs_stay_in_callers_job_group(
+    spark, sf_small, tmp_path
+):
+    """The dashboard's sub-tables stage from worker threads, yet every
+    job the refresh runs is attributed to the caller's job group: the
+    group gains at least one job per staged sub-table (rollup + six
+    panels), and no job submitted during the call falls outside it."""
+    import uuid
+
+    from energy_data_pipeline_spark.jobs.analytics import (
+        refresh_dashboard_incremental,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = uuid.uuid4().hex[:8]
+    group, pre, post = f"g-{tag}", f"pre-{tag}", f"post-{tag}"
+    try:
+        sc.setJobGroup(pre, "marker before the refresh")
+        spark.range(1).collect()
+        sc.setJobGroup(group, "incremental dashboard refresh")
+        refresh_dashboard_incremental(spark, sf_small, str(tmp_path / "dash"))
+        sc.setJobGroup(post, "marker after the refresh")
+        spark.range(1).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    lo = max(tracker.getJobIdsForGroup(pre))
+    hi = min(tracker.getJobIdsForGroup(post))
+    in_group = set(tracker.getJobIdsForGroup(group))
+    assert len(in_group) >= 7
+    assert set(range(lo + 1, hi)) == in_group
 
 
 def test_incremental_refresh_replay_and_crash_are_safe(

@@ -1070,6 +1070,42 @@ class TestManifestTable:
         assert mt.group_read(spark, root, "corpus").count() == 2
         assert mt.group_read(spark, root, "index").count() == 2
 
+    def test_group_overwrite_failed_stage_publishes_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Concurrent staging keeps the crash contract: one sub-table's
+        stage fails, the error reaches the caller, the live version does
+        not move, and every sub-table reads exactly as before."""
+        from energy_data_pipeline_spark.sinks import manifest_table as mt
+
+        root = str(tmp_path / "g")
+        subs = ("a", "b", "c")
+        mt.group_overwrite(
+            {s: spark.createDataFrame([(1, s)], "k long, v string") for s in subs},
+            root,
+        )
+        v0 = mt.read_manifest(root)["version"]
+        real_stage = mt._stage_group_files
+
+        def failing_stage(df, root_, sub):
+            if sub == "b":
+                raise OSError("injected staging failure")
+            return real_stage(df, root_, sub)
+
+        monkeypatch.setattr(mt, "_stage_group_files", failing_stage)
+        with pytest.raises(OSError, match="injected staging failure"):
+            mt.group_overwrite(
+                {
+                    s: spark.createDataFrame([(2, s + "2")], "k long, v string")
+                    for s in subs
+                },
+                root,
+            )
+        assert mt.read_manifest(root)["version"] == v0
+        for s in subs:
+            rows = {tuple(r) for r in mt.group_read(spark, root, s).collect()}
+            assert rows == {(1, s)}
+
     def test_default_cas_serializes_simultaneous_commits(self, spark, tmp_path):
         """The round-8 default CAS (O_CREAT|O_EXCL lock around the
         check->replace pair) must survive genuinely simultaneous
